@@ -238,26 +238,6 @@ class ExecutionContext:
         ``spark.sql`` — Spark's parser covers a strict superset of the
         reference's ANSI subset (sqlparser 0.2.1, ``Cargo.toml:34``).
         """
-        import threading as _threading
-
-        from datafusion_archive_spark.operators.util import loop_owner
-
-        owner = loop_owner(self.spark)
-        if owner is not None and owner is not _threading.current_thread():
-            # another thread's iterative loop has narrowed this
-            # session's conf — planning here would silently use the
-            # loop's shuffle width with AQE off. Since round 14,
-            # loops run on a child session (operators.util.
-            # loop_session) and never narrow this conf; this guard
-            # therefore only fires on the loop_conf FALLBACK path,
-            # where the best-effort caveat stands: actions on
-            # DataFrames built earlier are the caller's
-            # responsibility
-            raise RuntimeError(
-                "another thread's iterative loop (loop_conf) holds "
-                "this SparkSession's conf scope; run concurrent "
-                "queries on their own SparkSession"
-            )
         if _ddl.is_create_external_table(query):
             stmt = _ddl.parse_create_external_table(query)
             self._execute_ddl(stmt)

@@ -82,8 +82,9 @@ def ngram_jaccard_pairs(
     side_pred=None,
 ) -> DataFrame:
     """Exact pairwise Jaccard similarity over k-word shingle sets,
-    returning pairs ``(id_a < id_b, jaccard)`` with
-    ``jaccard >= threshold``.
+    returning pairs ``(id_a, id_b, jaccard)`` with
+    ``jaccard >= threshold`` — ``id_a < id_b`` when ``side_pred`` is
+    None, otherwise ``id_a`` is the predicate side.
 
     ``side_pred`` (round 16, ADVICE r15): an optional id-column
     predicate restricting WHICH pairs are enumerated — side a holds
@@ -595,18 +596,13 @@ def _rewrap_checkpoint(ck: DataFrame) -> DataFrame:
     comment: carried sizeInBytes compounds across self-join rounds
     until Catalyst's stats visitor dominates wall time). Uses the
     JVM-side internalCreateDataFrame so no row crosses the Python
-    boundary; falls back to the public createDataFrame(rdd) path if
-    the internal API is unavailable (e.g. Spark Connect)."""
-    try:
-        jdf = ck._jdf
-        jrdd = jdf.queryExecution().toRdd()
-        spark = ck.sparkSession
-        new_jdf = spark._jsparkSession.internalCreateDataFrame(
-            jrdd, jdf.schema(), False
-        )
-        return DataFrame(new_jdf, spark)
-    except Exception:  # pragma: no cover - connect-only path
-        return ck.sparkSession.createDataFrame(ck.rdd, schema=ck.schema)
+    boundary."""
+    jdf = ck._jdf
+    spark = ck.sparkSession
+    new_jdf = spark._jsparkSession.internalCreateDataFrame(
+        jdf.queryExecution().toRdd(), jdf.schema(), False
+    )
+    return DataFrame(new_jdf, spark)
 
 
 def connected_components(
@@ -772,24 +768,11 @@ def connected_components(
             # compounding capped the 240k-point probe even with one jump
             # per round). Re-wrapping the materialized InternalRow RDD in
             # a fresh relation resets the stats every round — JVM-side,
-            # no Python data movement; the public createDataFrame(rdd)
-            # fallback covers connect-style sessions without _jdf.
+            # no Python data movement.
             rewrapped = _rewrap_checkpoint(ck)
             # convergence straight off the checkpoint job's metrics
-            # (the _old column carried through the round). The
-            # fallback recomputes from the materialized checkpoint on
-            # sessions where CollectMetrics on a checkpoint action is
-            # unavailable (connect-style sessions).
-            try:
-                changed = obs.get["n_changed"]
-            except Exception:  # pragma: no cover - connect-only path
-                changed = (
-                    rewrapped.filter(
-                        F.col("component") != F.col("_old")
-                    )
-                    .limit(1)
-                    .count()
-                )
+            # (the _old column carried through the round)
+            changed = obs.get["n_changed"]
             new_labels = rewrapped.select("node", "component")
             if labels_l is not labels_first:
                 labels_l.unpersist()
@@ -807,8 +790,7 @@ def connected_components(
                 break
         # hand the (materialized — rewrapped checkpoint) result back
         # to the caller's session before the scope drops its views;
-        # downstream consumers then execute under the caller's conf,
-        # exactly as the old loop_conf contract promised
+        # downstream consumers then execute under the caller's conf
         result = ls.handback(labels_l)
     edges.unpersist()
     labels.unpersist()

@@ -174,7 +174,7 @@ def loop_parts(spark, n_rows: int) -> int:
     ``graph.pagerank`` pre-partitions its cached contribution table by
     dst at exactly this width so the per-iteration aggregate's
     required distribution is already satisfied and its Exchange is
-    elided; ``loop_conf`` / ``loop_session`` derive their
+    elided; ``loop_session`` derives its child session's
     ``spark.sql.shuffle.partitions`` from the same function. If the
     two ever computed different counts, the layout would silently stop
     matching and the per-iteration shuffle would return — deriving
@@ -182,10 +182,7 @@ def loop_parts(spark, n_rows: int) -> int:
     (tests/test_round16.py pins it)."""
     lo = max(1, -(-n_rows // LOOP_ROWS_PER_PARTITION))
     hi = max(1, -(-n_rows // LOOP_MIN_ROWS_PER_TASK))
-    try:
-        dp = spark.sparkContext.defaultParallelism
-    except Exception:  # pragma: no cover - connect-style session
-        dp = lo
+    dp = spark.sparkContext.defaultParallelism
     return min(max(dp, lo), hi)
 
 #: broadcast a label/rank-sized frame into per-iteration joins when
@@ -224,9 +221,9 @@ SALT_SHUFFLE_SIGNAL_MULT = 4
 
 def salt_count(spark, n_groups: int) -> int:
     """Salt fan-out for a salted two-phase top-k window, derived from
-    cluster parallelism the way :class:`loop_conf` derives its shuffle
-    width (VERDICT r13 #3) instead of a fixed constant: enough salts
-    that ``n_groups * salts`` covers ``SALT_OVERDECOMPOSE x
+    cluster parallelism the way :func:`loop_parts` derives the loop
+    shuffle width (VERDICT r13 #3) instead of a fixed constant: enough
+    salts that ``n_groups * salts`` covers ``SALT_OVERDECOMPOSE x
     parallelism`` phase-1 sub-sorts, clamped to [SALT_MIN, SALT_MAX].
     The parallelism signal is ``defaultParallelism``, raised toward
     the configured ``spark.sql.shuffle.partitions`` but only up to
@@ -254,10 +251,7 @@ def salt_count(spark, n_groups: int) -> int:
     cap (sized by phase 2's salts x k rescan cost) intentionally
     wins.
     """
-    try:
-        dp = spark.sparkContext.defaultParallelism
-    except Exception:  # pragma: no cover - connect-style session
-        dp = 8
+    dp = spark.sparkContext.defaultParallelism
     try:
         shuffle_w = int(spark.conf.get("spark.sql.shuffle.partitions"))
         dp = max(dp, min(shuffle_w, SALT_SHUFFLE_SIGNAL_MULT * dp))
@@ -265,191 +259,6 @@ def salt_count(spark, n_groups: int) -> int:
         pass
     salts = -(-SALT_OVERDECOMPOSE * dp // max(n_groups, 1))
     return min(max(salts, SALT_MIN), SALT_MAX)
-
-
-#: Serialize iterative-loop conf scopes per SparkSession (VERDICT r11
-#: #3): the loop narrows SESSION-scoped confs, so two concurrent loops
-#: on one session would corrupt each other's saved/restored values,
-#: and any other query planned mid-loop would silently run under the
-#: narrowed width with AQE off. One lock per live session object;
-#: keyed by id(), with a weakref.finalize registered on the session
-#: the first time its lock is created so the entry (and any stale
-#: owner row) is pruned when the session object is collected — a
-#: recycled id() therefore never inherits a dead session's lock, and
-#: a process cycling many sessions doesn't grow the registry
-#: monotonically (VERDICT r12 #5).
-#: RLock, not Lock: _prune_loop_entry runs as a weakref.finalize
-#: callback, which the interpreter may fire during ANY allocation —
-#: including inside _session_loop_lock's own critical section (it
-#: allocates a Lock). A non-reentrant registry lock would deadlock
-#: that thread against itself.
-_LOOP_REGISTRY_LOCK = threading.RLock()
-_LOOP_LOCKS: dict[int, threading.Lock] = {}
-_LOOP_OWNERS: dict[int, threading.Thread] = {}
-
-
-def _prune_loop_entry(key: int) -> None:
-    """weakref.finalize callback: drop a collected session's lock and
-    owner entries. Runs at GC time; by then no live thread can hold
-    the scope (the scope's ``with`` block keeps the session
-    referenced), so discarding the lock object is safe."""
-    with _LOOP_REGISTRY_LOCK:
-        _LOOP_LOCKS.pop(key, None)
-        _LOOP_OWNERS.pop(key, None)
-
-#: A second loop waiting on a session's loop lock aborts after this
-#: long — a loop that still holds the conf scope after 10 minutes on
-#: the certified scales is hung, and failing loudly beats deadlocking
-#: the caller forever.
-LOOP_LOCK_TIMEOUT_SEC = 600.0
-
-
-def _session_loop_lock(spark) -> threading.Lock:
-    with _LOOP_REGISTRY_LOCK:
-        key = id(spark)
-        lock = _LOOP_LOCKS.get(key)
-        if lock is None:
-            lock = _LOOP_LOCKS[key] = threading.Lock()
-            try:
-                weakref.finalize(spark, _prune_loop_entry, key)
-            except TypeError:  # pragma: no cover - non-weakrefable stub
-                pass
-        return lock
-
-
-def loop_owner(spark) -> threading.Thread | None:
-    """The thread currently holding an iterative-loop conf scope on
-    ``spark``, or ``None``. Query entry points (the registry wrapper,
-    ``ExecutionContext.sql``) check this to fail loudly instead of
-    silently planning under a loop's narrowed session conf from
-    another thread. Best-effort entry-point check only — see the
-    concurrency-contract note on :class:`loop_conf`."""
-    return _LOOP_OWNERS.get(id(spark))
-
-
-class loop_conf:
-    """Scope the session conf to an iterative loop (connected-
-    components propagation, PageRank power iteration).
-
-    SINCE ROUND 14 this is the FALLBACK path only: the iterative
-    operators run their loops through :class:`loop_session` (a
-    dedicated ``newSession()`` child whose narrowed conf is invisible
-    to every other thread — the structural fix for the TOCTOU residue
-    documented below, VERDICT r13 #2), and degrade to this locked
-    caller-session scope only if the child-session route cannot
-    initialize. The lock / owner-registry / entry-point guards below
-    exist for that fallback.
-
-    Original contract: AQE re-plans
-    and materializes every tiny per-round query stage (~0.4 s/round of
-    pure re-optimization overhead on a toy graph), and the session's
-    shuffle width is sized for fact scans, not the loop's label/edge-
-    sized shuffles. The width is derived from ONE real count of the
-    (round-invariant) per-iteration row set: the cluster's default
-    parallelism, clamped to [rows/1M, rows/50k] so tasks stay between
-    50k rows (scheduling amortization) and 1M rows (memory). Cut the
-    sf0.1 DBSCAN component resolution 23.7 s → 10 s and the sf0.1
-    PageRank loop 9.2 s → ~4 s with byte-identical results; at fact
-    scale the computed width grows with the measured data, the same
-    knob a cluster job would set, derived the same way. Both settings
-    are restored on exit (including on error) — every action the loop
-    runs happens inside the scope, and the returned frame is already
-    materialized, so downstream consumers execute under the caller's
-    conf.
-
-    CONCURRENCY CONTRACT (enforced since round 12, VERDICT r11 #3):
-    the conf is SESSION-scoped for the loop's duration, not
-    query-scoped, so the scope takes a per-session lock — concurrent
-    loops on one session SERIALIZE (each sees its own clean
-    enter/restore cycle instead of corrupting the other's saved
-    confs), nested use on the same thread raises (it would deadlock,
-    and an inner loop restoring the outer loop's narrowed conf is
-    already a bug), and query entry points (the registry wrapper,
-    ``ExecutionContext.sql``) raise via :func:`loop_owner` if another
-    thread's loop currently holds the session — failing loudly
-    instead of silently planning under the narrowed width with AQE
-    off. The entry-point guard is BEST-EFFORT, not airtight (ADVICE
-    r12): it checks at build/sql-entry time only, so a DataFrame
-    built before a loop starts but *collected* while the loop holds
-    the scope still plans under the narrowed conf, and a loop can
-    enter in the window between the check and planning. Actions on
-    pre-built DataFrames during a loop remain the caller's
-    responsibility — a multi-tenant caller should give iterative
-    jobs their own SparkSession; the guard turns the common
-    misuse into an error instead of a wrong plan."""
-
-    def __init__(self, spark, n_rows: int):
-        self._spark = spark
-        self._parts = loop_parts(spark, n_rows)
-
-    @staticmethod
-    def _get(conf, key):
-        try:
-            return conf.get(key)
-        except Exception:
-            return None
-
-    def __enter__(self):
-        me = threading.current_thread()
-        if _LOOP_OWNERS.get(id(self._spark)) is me:
-            raise RuntimeError(
-                "loop_conf is not reentrant: this thread already "
-                "holds an iterative-loop conf scope on this "
-                "SparkSession (nested loops would restore each "
-                "other's narrowed confs)"
-            )
-        # resolve the conf handle BEFORE taking the lock: on a
-        # stopped/broken session the .conf property itself raises,
-        # and raising here leaves nothing to unwind
-        conf = self._spark.conf
-        lock = _session_loop_lock(self._spark)
-        if not lock.acquire(timeout=LOOP_LOCK_TIMEOUT_SEC):
-            raise RuntimeError(
-                "timed out waiting for another thread's iterative-"
-                f"loop conf scope ({LOOP_LOCK_TIMEOUT_SEC:.0f}s) — "
-                "give concurrent iterative jobs their own "
-                "SparkSession"
-            )
-        self._lock = lock
-        _LOOP_OWNERS[id(self._spark)] = me
-        # If the save/narrow block raises, __exit__ never runs (the
-        # with-statement skips it when __enter__ raises), so undo the
-        # owner entry and release the lock here — otherwise the
-        # session's loop scope would be held forever and every later
-        # query would fail the loop_owner guard (ADVICE r12).
-        try:
-            self._old_aqe = self._get(conf, "spark.sql.adaptive.enabled")
-            self._old_parts = self._get(conf, "spark.sql.shuffle.partitions")
-            conf.set("spark.sql.adaptive.enabled", "false")
-            conf.set("spark.sql.shuffle.partitions", str(self._parts))
-        except BaseException:
-            try:  # best-effort restore of anything already narrowed
-                if self._old_aqe is None:
-                    conf.unset("spark.sql.adaptive.enabled")
-                else:
-                    conf.set("spark.sql.adaptive.enabled", self._old_aqe)
-            except Exception:
-                pass
-            _LOOP_OWNERS.pop(id(self._spark), None)
-            lock.release()
-            raise
-        return self
-
-    def __exit__(self, *exc):
-        conf = self._spark.conf
-        try:
-            for key, old in (
-                ("spark.sql.adaptive.enabled", self._old_aqe),
-                ("spark.sql.shuffle.partitions", self._old_parts),
-            ):
-                if old is None:
-                    conf.unset(key)
-                else:
-                    conf.set(key, old)
-        finally:
-            _LOOP_OWNERS.pop(id(self._spark), None)
-            self._lock.release()
-        return False
 
 
 #: Monotonic suffix for loop_session's global-temp-view handoff names
@@ -466,12 +275,12 @@ _HANDOFF_SEQ = itertools.count()
 #: therefore still get DISTINCT children and never share a narrowed
 #: conf), and returns it on exit if the idle pool is below
 #: _CHILD_POOL_MAX; steady-state sequential loops reuse one child per
-#: parent. Same id()+weakref.finalize keying discipline as
-#: _LOOP_LOCKS: the pool entry dies with the parent session, so a
-#: recycled id() never inherits another session's children. Reuse is
-#: conf-safe because __enter__ re-syncs the child's SQLConf to the
-#: caller's effective confs (diff-based: only changed keys touch
-#: py4j) before re-narrowing.
+#: parent. Keyed by id() with a weakref.finalize on the parent: the
+#: pool entry dies with the parent session, so a recycled id() never
+#: inherits another session's children. Reuse is conf-safe because
+#: __enter__ re-syncs the child's SQLConf to the caller's effective
+#: confs (diff-based: only changed keys touch py4j) before
+#: re-narrowing.
 _CHILD_POOL_LOCK = threading.RLock()
 _CHILD_POOL: dict[int, list] = {}
 _CHILD_POOL_MAX = 2
@@ -497,20 +306,21 @@ def _child_pool_for(spark) -> list:
 
 
 class loop_session:
-    """Child-session isolation for iterative loops — the structural
-    fix for :class:`loop_conf`'s TOCTOU residue (VERDICT r13 #2).
+    """The scope every iterative loop (connected-components
+    propagation, PageRank power iteration) runs in.
 
-    ``loop_conf`` narrows SESSION-scoped confs (AQE off, loop-sized
-    shuffle width) on the CALLER's session, so a DataFrame built by
-    another thread before the loop but *collected* mid-loop silently
-    plans under the narrowed conf — the lock + owner registry turned
-    the common misuse into an error but could not close that window.
-    ``loop_session`` closes it by never touching the caller's conf at
-    all: the loop runs on a dedicated ``spark.newSession()`` child
+    AQE re-plans and materializes every tiny per-round query stage,
+    and the session's shuffle width is sized for fact scans, not the
+    loop's label/edge-sized shuffles — so a loop runs with AQE off and
+    the :func:`loop_parts` width derived from one real count of its
+    per-iteration rows. Those confs are never set on the CALLER's
+    session: the loop runs on a dedicated ``spark.newSession()`` child
     (own SQLConf; shared SparkContext, shared cache manager, shared
     global-temp-view catalog), so the narrowed width/AQE-off are
-    invisible to every other thread by construction, concurrent loops
-    no longer serialize, and there is nothing to restore on exit.
+    invisible to every other thread by construction (VERDICT r13 #2),
+    concurrent and nested loops are independent, and there is nothing
+    to restore on exit. If the child cannot be created, the scope
+    raises; it never narrows the caller's conf instead.
 
     Handoff protocol (DataFrames are session-bound, so the loop's
     inputs must cross explicitly):
@@ -523,7 +333,7 @@ class loop_session:
     - ``handback(df)`` — the inverse: return a CALLER-bound frame for
       the loop's (already materialized — localCheckpoint/rewrapped)
       result, so downstream consumers execute under the caller's
-      conf exactly as the loop_conf contract promised.
+      conf.
 
     All handoff views are dropped on exit (success or error). The
     child session itself has no close/stop API short of stopping the
@@ -544,20 +354,6 @@ class loop_session:
     block is evicted mid-loop and the child recomputes the upstream
     scan, it executes under the caller's semantics, not Spark
     defaults.
-
-    FALLBACK: if the child-session route fails to initialize (a
-    session object whose ``newSession``/catalog surface is
-    unavailable, or a Spark Connect session — detected by the absent
-    ``_jsc`` — whose deferred server-side analysis would resolve
-    handback views only after the scope dropped them, ADVICE r14),
-    the scope degrades to the locked :class:`loop_conf`
-    on the caller's session — same semantics as rounds 12-13, with
-    handoff/handback as identity functions — and emits a
-    ``RuntimeWarning`` naming the degraded guarantees (caller conf IS
-    narrowed, concurrent loops serialize, nesting raises), so the
-    degradation is visible instead of silent. The loop_conf machinery
-    (lock, owner registry, entry-point guards) is retained exactly
-    for this path.
     """
 
     #: curated fallback list if conf.getAll is unavailable: the confs
@@ -576,107 +372,79 @@ class loop_session:
         self._spark = spark
         self._n_rows = n_rows
         self._child = None
-        self._fallback = None
         self._views: list[str] = []
         self._gt_db = "global_temp"
         self._state = "new"  # new -> entered -> exited
 
     def __enter__(self):
-        reused = False
+        with _CHILD_POOL_LOCK:
+            pool = _child_pool_for(self._spark)
+            child = pool.pop() if pool else None
+        reused = child is not None
+        if not reused:
+            child = self._spark.newSession()
+        # sync the child's SQLConf to the caller's effective (runtime-
+        # set) confs — see the class docstring. On a pooled child this
+        # is a DIFF: only keys whose values changed since the last loop
+        # touch py4j, and keys a previous scope set that the caller no
+        # longer carries are unset, so reuse cannot leak conf across
+        # loops.
         try:
-            # Spark Connect detection (ADVICE r14): connect sessions
-            # analyze DataFrames lazily server-side, so a handed-back
-            # frame would resolve its (dropped) handoff view only
-            # AFTER the scope exits — take the loop_conf fallback
-            # instead, mirroring _rewrap_checkpoint's connect path.
-            if getattr(self._spark, "_jsc", None) is None:
-                raise RuntimeError(
-                    "connect-style session (no _jsc): deferred "
-                    "analysis would resolve handback views after "
-                    "scope exit"
-                )
-            with _CHILD_POOL_LOCK:
-                pool = _child_pool_for(self._spark)
-                child = pool.pop() if pool else None
-            if child is not None:
-                reused = True
-            else:
-                child = self._spark.newSession()
-            # sync the child's SQLConf to the caller's effective
-            # (runtime-set) confs — see the class docstring. On a
-            # pooled child this is a DIFF: only keys whose values
-            # changed since the last loop touch py4j, and keys a
-            # previous scope set that the caller no longer carries
-            # are unset, so reuse cannot leak conf across loops.
+            confs = dict(self._spark.conf.getAll)
+        except Exception:
+            confs = {}
+            for key in self._SEMANTIC_CONF_KEYS:
+                try:
+                    confs[key] = self._spark.conf.get(key)
+                except Exception:
+                    pass
+        current = {}
+        if reused:
             try:
-                confs = dict(self._spark.conf.getAll)
+                current = dict(child.conf.getAll)
             except Exception:
-                confs = {}
-                for key in self._SEMANTIC_CONF_KEYS:
+                current = {}
+            for key in current:
+                if key not in confs:
                     try:
-                        confs[key] = self._spark.conf.get(key)
+                        child.conf.unset(key)
                     except Exception:
                         pass
-            current = {}
-            if reused:
-                try:
-                    current = dict(child.conf.getAll)
-                except Exception:
-                    current = {}
-                for key in current:
-                    if key not in confs:
-                        try:
-                            child.conf.unset(key)
-                        except Exception:
-                            pass
-            for key, val in confs.items():
-                if reused and current.get(key) == val:
-                    continue
-                try:
-                    child.conf.set(key, val)
-                except Exception:
-                    # static / non-modifiable entries (spark.app.name)
-                    # legitimately refuse; a SEMANTIC key refusing
-                    # means a mid-loop cache-eviction recompute would
-                    # run under Spark-default scan/expr semantics —
-                    # loud, not silent (VERDICT r14 #4)
-                    if key in self._SEMANTIC_CONF_KEYS:
-                        warnings.warn(
-                            f"loop_session: failed to clone semantic "
-                            f"conf {key!r} onto the child session; a "
-                            "mid-loop recomputation of a handed-off "
-                            "input may use Spark-default semantics "
-                            "for it",
-                            RuntimeWarning,
-                            stacklevel=2,
-                        )
-            # derive the loop width from the shared public helper
-            # (one real count of the round-invariant per-iteration
-            # rows, clamped to the per-task row band) — AFTER the
-            # sync, so the narrowing wins over any cloned width
-            parts = loop_parts(self._spark, self._n_rows)
-            child.conf.set("spark.sql.adaptive.enabled", "false")
-            child.conf.set("spark.sql.shuffle.partitions", str(parts))
+        for key, val in confs.items():
+            if reused and current.get(key) == val:
+                continue
             try:
-                self._gt_db = child.conf.get(
-                    "spark.sql.globalTempDatabase", "global_temp"
-                )
+                child.conf.set(key, val)
             except Exception:
-                self._gt_db = "global_temp"
-            self._child = child
-        except Exception as exc:
-            warnings.warn(
-                "loop_session: child-session route failed "
-                f"({type(exc).__name__}: {exc}); degrading to the "
-                "locked loop_conf scope on the CALLER's session — "
-                "its conf will be narrowed for the loop's duration, "
-                "concurrent loops serialize, and nested scopes on "
-                "this thread will raise",
-                RuntimeWarning,
-                stacklevel=2,
+                # static / non-modifiable entries (spark.app.name)
+                # legitimately refuse; a SEMANTIC key refusing means a
+                # mid-loop cache-eviction recompute would run under
+                # Spark-default scan/expr semantics — loud, not silent
+                # (VERDICT r14 #4)
+                if key in self._SEMANTIC_CONF_KEYS:
+                    warnings.warn(
+                        f"loop_session: failed to clone semantic "
+                        f"conf {key!r} onto the child session; a "
+                        "mid-loop recomputation of a handed-off "
+                        "input may use Spark-default semantics "
+                        "for it",
+                        RuntimeWarning,
+                        stacklevel=2,
+                    )
+        # derive the loop width from the shared public helper (one
+        # real count of the round-invariant per-iteration rows,
+        # clamped to the per-task row band) — AFTER the sync, so the
+        # narrowing wins over any cloned width
+        parts = loop_parts(self._spark, self._n_rows)
+        child.conf.set("spark.sql.adaptive.enabled", "false")
+        child.conf.set("spark.sql.shuffle.partitions", str(parts))
+        try:
+            self._gt_db = child.conf.get(
+                "spark.sql.globalTempDatabase", "global_temp"
             )
-            self._fallback = loop_conf(self._spark, self._n_rows)
-            self._fallback.__enter__()
+        except Exception:
+            self._gt_db = "global_temp"
+        self._child = child
         self._state = "entered"
         return self
 
@@ -705,31 +473,22 @@ class loop_session:
         return name
 
     def handoff(self, df: DataFrame) -> DataFrame:
-        """Caller-session frame -> child-bound frame (identity in
-        fallback mode)."""
+        """Caller-session frame -> child-bound frame."""
         self._check_entered("handoff")
-        if self._child is None:
-            return df
         return self._child.table(f"{self._gt_db}.{self._publish(df)}")
 
     def handback(self, df: DataFrame) -> DataFrame:
-        """Child-bound frame -> caller-session frame (identity in
-        fallback mode). The frame should already be materialized
-        (localCheckpoint / rewrapped RDD): the caller's first action
-        on it then just reads the materialized partitions under the
-        caller's own conf."""
+        """Child-bound frame -> caller-session frame. The frame should
+        already be materialized (localCheckpoint / rewrapped RDD): the
+        caller's first action on it then just reads the materialized
+        partitions under the caller's own conf."""
         self._check_entered("handback")
-        if self._child is None:
-            return df
         return self._spark.table(f"{self._gt_db}.{self._publish(df)}")
 
     def __exit__(self, *exc):
         if self._state != "entered":  # idempotent / never-entered
             return False
         self._state = "exited"
-        if self._fallback is not None:
-            fb, self._fallback = self._fallback, None
-            return fb.__exit__(*exc)
         # dropping by name is safe even if an entry was never created
         # (drop returns False) — and the handed-back frames keep
         # working: table() analyzed the view eagerly, so the plan no
@@ -745,9 +504,8 @@ class loop_session:
         # JVM SessionState (VERDICT r14 #2); beyond the cap, release
         # to the GC as before
         child, self._child = self._child, None
-        if child is not None:
-            with _CHILD_POOL_LOCK:
-                pool = _child_pool_for(self._spark)
-                if len(pool) < _CHILD_POOL_MAX:
-                    pool.append(child)
+        with _CHILD_POOL_LOCK:
+            pool = _child_pool_for(self._spark)
+            if len(pool) < _CHILD_POOL_MAX:
+                pool.append(child)
         return False

@@ -361,27 +361,6 @@ def _wrap(fn):
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         release_caches()
-        # fail loudly if another thread's iterative loop currently
-        # scopes this session's conf (narrowed shuffle width, AQE
-        # off) — building a query under it would silently plan wrong.
-        # Since round 14, loops run on a dedicated child session
-        # (operators.util.loop_session) and never touch this
-        # session's conf; this guard therefore only fires on the
-        # loop_conf FALLBACK path (child-session route unavailable),
-        # where the old best-effort caveat still applies: a DataFrame
-        # built here but collected mid-fallback-loop plans under the
-        # loop's conf.
-        import threading as _threading
-
-        from datafusion_archive_spark.operators.util import loop_owner
-
-        owner = loop_owner(spark)
-        if owner is not None and owner is not _threading.current_thread():
-            raise RuntimeError(
-                "another thread's iterative loop (loop_conf) holds "
-                "this SparkSession's conf scope; run concurrent "
-                "queries on their own SparkSession"
-            )
         # certified builds must use the engine-portable hash family:
         # a query built inside use_hash("xxhash64") would bake
         # non-oracle-reproducible fingerprints into its plan

@@ -78,6 +78,11 @@ def get_spark(
 
     Env overrides: ``SPARK_GRAFT_CPUS`` (local parallelism),
     ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
+
+    Raises ``RuntimeError`` if the session is not a classic (py4j)
+    one: the operators call JVM internals (``_jdf.queryExecution``,
+    ``internalCreateDataFrame``, ``PythonSQLUtils``, the SparkContext)
+    that a Spark Connect session does not expose.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
     if master is None:
@@ -125,6 +130,12 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if getattr(spark, "_jsc", None) is None:
+        raise RuntimeError(
+            "datafusion_archive_spark needs a classic (py4j) "
+            "SparkSession; Spark Connect (SPARK_REMOTE / spark.remote) "
+            "is unsupported"
+        )
     # spark.driver.memory only binds at JVM launch: if some earlier
     # code already created a session (the 1g default), getOrCreate
     # returns it and the OOM protection above silently does not apply

@@ -1,12 +1,11 @@
 """Round-11 continuation pins: the two engine-side perf fixes.
 
 1. ``connected_components`` runs its propagation loop under a scoped
-   session conf (AQE off + shuffle width sized to the measured
-   node+edge count — 23.7 s -> ~10 s on the sf0.1 DBSCAN graph). The
-   scope must RESTORE the caller's conf on exit and on error, produce
-   labels identical to a union-find ground truth, and the width must
-   scale with the measured graph (1 partition on a toy graph, ~n/1M
-   at fact scale).
+   conf (AQE off + shuffle width sized to the measured node+edge
+   count — 23.7 s -> ~10 s on the sf0.1 DBSCAN graph). The loop must
+   leave the caller's conf untouched, produce labels identical to a
+   union-find ground truth, and the width must scale with the
+   measured graph (1 partition on a toy graph, ~n/1M at fact scale).
 
 2. ``approx_aggs`` computes its sketch aggregates and its exact
    distinct in SEPARATE aggregations joined on the group key: putting
@@ -19,12 +18,10 @@
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from datafusion_archive_spark.operators import dedup
-from datafusion_archive_spark.operators.util import loop_conf
+from datafusion_archive_spark.operators.util import loop_parts
 
 
 def _union_find(pairs):
@@ -44,42 +41,16 @@ def _union_find(pairs):
 
 
 class TestLoopConf:
-    def test_restores_set_conf(self, spark):
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        scope = loop_conf(spark, 3_500_000)
-        with scope:
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(
-                scope._parts
-            )
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-
-    def test_restores_on_error(self, spark):
-        spark.conf.set("spark.sql.shuffle.partitions", "7")
-        with pytest.raises(RuntimeError):
-            with loop_conf(spark, 10):
-                assert (
-                    spark.conf.get("spark.sql.shuffle.partitions") == "1"
-                )
-                raise RuntimeError("boom")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
-
     def test_width_scales_with_graph(self, spark):
         dp = spark.sparkContext.defaultParallelism
         # tiny loops collapse to few large tasks (<= rows/50k)...
-        assert loop_conf(spark, 1)._parts == 1
-        assert loop_conf(spark, 10_000)._parts == 1
-        assert loop_conf(spark, 100_000)._parts == min(dp, 2)
+        assert loop_parts(spark, 1) == 1
+        assert loop_parts(spark, 10_000) == 1
+        assert loop_parts(spark, 100_000) == min(dp, 2)
         # ...mid-size loops use the cluster's parallelism...
-        assert loop_conf(spark, 3_500_000)._parts == min(
-            max(dp, 4), 70
-        )
+        assert loop_parts(spark, 3_500_000) == min(max(dp, 4), 70)
         # ...huge loops are memory-bound at ~1M rows/task
-        assert loop_conf(spark, 2_000_000_000)._parts == max(
-            dp, 2000
-        )
+        assert loop_parts(spark, 2_000_000_000) == max(dp, 2000)
 
     def test_labels_match_union_find_and_conf_survives(self, spark):
         spark.conf.set("spark.sql.shuffle.partitions", "7")

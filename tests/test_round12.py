@@ -1,151 +1,11 @@
-"""Round-12 contracts: the loop_conf concurrency guard (VERDICT r11
-#3 — the session-scoped conf caveat is now enforced, not just
-documented) and the two ADVICE r11 semantic mirrors (approx_aggs
-NULL-group join, Clark–Evans empty-table radius guard)."""
+"""Round-12 contracts: the two ADVICE r11 semantic mirrors
+(approx_aggs NULL-group join, Clark–Evans empty-table radius guard)."""
 
 from __future__ import annotations
 
-import threading
-import time
-
-import pytest
 from pyspark.sql import functions as F
 
-from datafusion_archive_spark.operators.util import (
-    LOOP_LOCK_TIMEOUT_SEC,
-    loop_conf,
-    loop_owner,
-)
-
 SF = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------- #
-# loop_conf concurrency contract                                    #
-# ---------------------------------------------------------------- #
-
-
-def test_loop_conf_nested_same_thread_raises(spark):
-    """An inner loop restoring the outer loop's narrowed conf is a
-    bug (and a lock deadlock) — nesting must fail loudly."""
-    with loop_conf(spark, 100):
-        assert loop_owner(spark) is threading.current_thread()
-        with pytest.raises(RuntimeError, match="not reentrant"):
-            with loop_conf(spark, 100):
-                pass  # pragma: no cover - never entered
-    # the failed inner enter must not have released the outer scope
-    # or corrupted the restore: exiting cleanly clears ownership
-    assert loop_owner(spark) is None
-
-
-def test_loop_conf_concurrent_query_raises(spark, sf_dir):
-    """THE r11 caveat, now asserted: while one thread's iterative
-    loop scopes the session conf, a registry query built from another
-    thread must raise instead of silently planning under the narrowed
-    width with AQE off. (Without the guard the query build succeeds —
-    this test fails loudly on the unguarded tree.)"""
-    from datafusion_archive_spark.queries import QUERIES
-
-    entered = threading.Event()
-    release = threading.Event()
-    errors: list[BaseException] = []
-
-    def looper():
-        try:
-            with loop_conf(spark, 100):
-                entered.set()
-                assert release.wait(timeout=30)
-        except BaseException as e:  # pragma: no cover - surfaced below
-            errors.append(e)
-            entered.set()
-
-    t = threading.Thread(target=looper)
-    t.start()
-    try:
-        assert entered.wait(timeout=30)
-        assert not errors
-        assert loop_owner(spark) is t
-        with pytest.raises(RuntimeError, match="iterative loop"):
-            QUERIES["scan_filter_project"](spark, sf_dir)
-    finally:
-        release.set()
-        t.join(timeout=30)
-    assert not errors
-    # once the loop exits, the same build succeeds and the session
-    # conf is back to the caller's values
-    assert loop_owner(spark) is None
-    assert QUERIES["scan_filter_project"](spark, sf_dir).count() >= 0
-
-
-def test_loop_conf_concurrent_sql_raises(spark):
-    """Same contract at the SQL surface (ExecutionContext.sql)."""
-    from datafusion_archive_spark.context import ExecutionContext
-
-    ctx = ExecutionContext(spark)
-    entered = threading.Event()
-    release = threading.Event()
-
-    def looper():
-        with loop_conf(spark, 100):
-            entered.set()
-            release.wait(timeout=30)
-
-    t = threading.Thread(target=looper)
-    t.start()
-    try:
-        assert entered.wait(timeout=30)
-        with pytest.raises(RuntimeError, match="iterative loop"):
-            ctx.sql("SELECT 1 AS one")
-    finally:
-        release.set()
-        t.join(timeout=30)
-    # and on the loop thread itself, planning was always allowed —
-    # the guard keys on the OWNER thread, not on mere scope presence
-    assert ctx.sql("SELECT 1 AS one").collect()[0].one == 1
-
-
-def test_loop_conf_concurrent_loops_serialize(spark):
-    """Two loops on one session must not interleave their
-    saved/restored confs: the second enter blocks until the first
-    scope exits, and after both exit the caller's conf is intact.
-    (Unguarded, B enters mid-A; A's exit then restores B's narrowed
-    width as if it were the session default — the corruption this
-    test pins against.)"""
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    order: list[str] = []
-    a_in = threading.Event()
-    a_release = threading.Event()
-
-    def loop_a():
-        with loop_conf(spark, 10_000_000):
-            order.append("a_enter")
-            a_in.set()
-            a_release.wait(timeout=30)
-            time.sleep(0.2)
-            order.append("a_exit")
-
-    def loop_b():
-        assert a_in.wait(timeout=30)
-        a_release.set()
-        with loop_conf(spark, 200_000):
-            # by lock contract, A has fully exited before B enters
-            order.append("b_enter")
-            order.append("b_exit")
-
-    ta = threading.Thread(target=loop_a)
-    tb = threading.Thread(target=loop_b)
-    ta.start()
-    tb.start()
-    ta.join(timeout=60)
-    tb.join(timeout=60)
-    assert order == ["a_enter", "a_exit", "b_enter", "b_exit"]
-    assert loop_owner(spark) is None
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_loop_lock_timeout_is_sane():
-    # the anti-deadlock bound exists and is minutes, not forever
-    assert 60 <= LOOP_LOCK_TIMEOUT_SEC <= 3600
 
 
 # ---------------------------------------------------------------- #

@@ -1,163 +1,12 @@
-"""Round-13 contracts: the ADVICE r12 fixes (loop_conf __enter__
-exception safety; sweep_outliers hung-re-read tolerance and explicit
---sf-dir scale verification) and the VERDICT r12 #5 loop-lock
-registry pruning (weakref.finalize on the session, so a process
-cycling sessions doesn't grow _LOOP_LOCKS monotonically)."""
+"""Round-13 contracts: the ADVICE r12 fixes (sweep_outliers
+hung-re-read tolerance and explicit --sf-dir scale verification)."""
 
 from __future__ import annotations
 
-import gc
 import importlib.util
 import pathlib
 import subprocess
 import sys
-
-import pytest
-
-from datafusion_archive_spark.operators import util as oputil
-from datafusion_archive_spark.operators.util import (
-    _LOOP_LOCKS,
-    _LOOP_OWNERS,
-    _session_loop_lock,
-    loop_conf,
-    loop_owner,
-)
-
-
-# ---------------------------------------------------------------- #
-# loop_conf __enter__ exception safety (ADVICE r12 medium)          #
-# ---------------------------------------------------------------- #
-
-
-class _FakeConf:
-    """Session-conf stub whose set() can be made to raise, to drive
-    the failure path loop_conf.__enter__ must survive."""
-
-    def __init__(self, store=None, fail_on=()):
-        self.store = dict(store or {})
-        self.fail_on = set(fail_on)
-
-    def get(self, key):
-        return self.store[key]  # KeyError caught by loop_conf._get
-
-    def set(self, key, value):
-        if key in self.fail_on:
-            raise RuntimeError(f"boom setting {key}")
-        self.store[key] = value
-
-    def unset(self, key):
-        self.store.pop(key, None)
-
-
-class _FakeSession:
-    """Just enough session surface for loop_conf: a .conf attribute
-    (no .sparkContext — loop_conf falls back to its row-derived
-    width). Weakref-able, so the registry pruning applies."""
-
-    def __init__(self, conf):
-        self.conf = conf
-
-
-def test_enter_failure_releases_lock_and_owner():
-    """If the conf save/narrow block raises, __exit__ never runs (the
-    with-statement skips it when __enter__ raises) — the scope must
-    undo its own owner entry and lock, or every later query on the
-    session would fail the loop_owner guard forever and the next
-    loop_conf would deadlock (ADVICE r12)."""
-    sess = _FakeSession(_FakeConf(fail_on={"spark.sql.adaptive.enabled"}))
-    with pytest.raises(RuntimeError, match="boom"):
-        with loop_conf(sess, 100):
-            pass  # pragma: no cover - never entered
-    assert loop_owner(sess) is None
-    lock = _session_loop_lock(sess)
-    assert lock.acquire(blocking=False)
-    lock.release()
-    # and the session is not poisoned: a working enter/exit succeeds
-    sess.conf.fail_on.clear()
-    with loop_conf(sess, 100):
-        assert loop_owner(sess) is not None
-    assert loop_owner(sess) is None
-
-
-def test_enter_partial_failure_restores_narrowed_conf():
-    """If the FIRST narrow (AQE off) lands and the SECOND raises, the
-    failed enter must put AQE back to the caller's value — otherwise
-    the session silently keeps AQE disabled with no scope to ever
-    restore it."""
-    conf = _FakeConf(
-        store={"spark.sql.adaptive.enabled": "true"},
-        fail_on={"spark.sql.shuffle.partitions"},
-    )
-    sess = _FakeSession(conf)
-    with pytest.raises(RuntimeError, match="boom"):
-        with loop_conf(sess, 100):
-            pass  # pragma: no cover - never entered
-    assert conf.store["spark.sql.adaptive.enabled"] == "true"
-    assert loop_owner(sess) is None
-
-
-def test_enter_partial_failure_unsets_previously_unset_aqe():
-    """Same, when AQE had no session-level value before: the failed
-    enter unsets it rather than pinning 'false'."""
-    conf = _FakeConf(fail_on={"spark.sql.shuffle.partitions"})
-    sess = _FakeSession(conf)
-    with pytest.raises(RuntimeError, match="boom"):
-        with loop_conf(sess, 100):
-            pass  # pragma: no cover - never entered
-    assert "spark.sql.adaptive.enabled" not in conf.store
-    assert loop_owner(sess) is None
-
-
-# ---------------------------------------------------------------- #
-# loop-lock registry pruning (VERDICT r12 #5)                       #
-# ---------------------------------------------------------------- #
-
-
-def test_loop_lock_registry_pruned_on_session_collection():
-    """Cycling sessions must not grow _LOOP_LOCKS monotonically: the
-    weakref.finalize registered at lock creation prunes the entry
-    when the session object is collected, so a recycled id() can
-    never inherit a dead session's lock either."""
-    baseline = len(_LOOP_LOCKS)
-    sessions = [_FakeSession(_FakeConf()) for _ in range(8)]
-    for s in sessions:
-        _session_loop_lock(s)
-    assert len(_LOOP_LOCKS) >= baseline + 8
-    keys = [id(x) for x in sessions]
-    del sessions, s  # s: the for-loop variable still holds the last one
-    gc.collect()
-    for k in keys:
-        assert k not in _LOOP_LOCKS
-        assert k not in _LOOP_OWNERS
-    # registry back to its baseline: no monotonic growth
-    assert len(_LOOP_LOCKS) == baseline
-
-
-def test_loop_lock_registry_stable_across_reuse():
-    """Repeated lock lookups on one live session reuse one entry (no
-    per-call growth), and the entry survives while the session is
-    referenced."""
-    sess = _FakeSession(_FakeConf())
-    a = _session_loop_lock(sess)
-    b = _session_loop_lock(sess)
-    assert a is b
-    assert id(sess) in _LOOP_LOCKS
-    del sess
-    gc.collect()
-    assert a is not None  # lock object itself stays valid for holders
-
-
-def test_prune_clears_stale_owner_row():
-    """_prune_loop_entry drops any owner entry too — a dead session
-    must not leave a stale owner that poisons a recycled id()."""
-    sess = _FakeSession(_FakeConf())
-    key = id(sess)
-    _session_loop_lock(sess)
-    _LOOP_OWNERS[key] = object()  # simulate a stale row
-    del sess
-    gc.collect()
-    assert key not in _LOOP_OWNERS
-    assert key not in _LOOP_LOCKS
 
 
 # ---------------------------------------------------------------- #
@@ -427,30 +276,3 @@ class TestExprStringBlockingParity:
         }
         assert simple == combo and simple
 
-
-def test_enter_conf_property_failure_leaves_nothing_held():
-    """If the session's .conf property itself raises (stopped/broken
-    session), __enter__ must fail before taking the lock or owner
-    entry — nothing to unwind, session id not poisoned."""
-
-    class _BrokenSession:
-        @property
-        def conf(self):
-            raise RuntimeError("session is stopped")
-
-    sess = _BrokenSession()
-    with pytest.raises(RuntimeError, match="stopped"):
-        with loop_conf(sess, 100):
-            pass  # pragma: no cover - never entered
-    assert loop_owner(sess) is None
-    assert id(sess) not in oputil._LOOP_OWNERS
-
-
-def test_registry_lock_is_reentrant_for_finalizers():
-    """_prune_loop_entry may fire as a weakref.finalize callback
-    during any allocation — including while the same thread holds
-    the registry lock. The registry lock must therefore be
-    reentrant, or the thread deadlocks against itself."""
-    with oputil._LOOP_REGISTRY_LOCK:
-        # simulates a finalizer firing inside the critical section
-        oputil._prune_loop_entry(0xDEAD)  # must not deadlock

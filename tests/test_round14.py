@@ -235,22 +235,6 @@ def test_salt_count_shuffle_partitions_signal():
     assert SALT_MIN >= 8
 
 
-def test_salt_count_broken_session_falls_back():
-    from datafusion_archive_spark.operators.util import (
-        SALT_MAX,
-        SALT_MIN,
-        salt_count,
-    )
-
-    class _Broken:
-        @property
-        def sparkContext(self):
-            raise RuntimeError("connect-style session")
-
-    got = salt_count(_Broken(), 6)
-    assert SALT_MIN <= got <= SALT_MAX
-
-
 # ---------------------------------------------------------------- #
 # VERDICT r13 #2: loop_session — child-session loop isolation       #
 # ---------------------------------------------------------------- #
@@ -268,7 +252,7 @@ def _views(spark):
 
 def test_loop_session_parent_conf_never_narrowed(spark):
     """The structural TOCTOU fix: mid-scope, the CALLER's session conf
-    is byte-identical to its pre-scope state (under loop_conf it read
+    is byte-identical to its pre-scope state (only the child reads
     the narrowed width with AQE off), so a frame built before the
     loop and collected during it plans exactly as it would with no
     loop running."""
@@ -279,7 +263,7 @@ def test_loop_session_parent_conf_never_narrowed(spark):
         spark.conf.get("spark.sql.adaptive.enabled"),
     )
     with loop_session(spark, 1000) as ls:
-        assert ls._child is not None  # child route, not fallback
+        assert ls._child is not None
         assert (
             spark.conf.get("spark.sql.shuffle.partitions"),
             spark.conf.get("spark.sql.adaptive.enabled"),
@@ -334,8 +318,7 @@ def test_loop_session_drops_views_on_exit_and_error(spark):
 
 def test_loop_session_concurrent_scopes_do_not_serialize(spark):
     """Two threads' loops enter simultaneously — a shared barrier
-    inside both scopes releases only if neither blocks the other
-    (loop_conf serialized them on the session lock)."""
+    inside both scopes releases only if neither blocks the other."""
     import threading
 
     from datafusion_archive_spark.operators.util import loop_session
@@ -358,33 +341,6 @@ def test_loop_session_concurrent_scopes_do_not_serialize(spark):
     assert errs == []
 
 
-def test_loop_session_fallback_uses_locked_loop_conf(spark):
-    """A session whose newSession() raises degrades to the loop_conf
-    path: parent conf narrowed during the scope (under the session
-    lock), restored after; handoff/handback are identity."""
-    from datafusion_archive_spark.operators.util import loop_session
-
-    class _NoChild:
-        def __init__(self, real):
-            self._real = real
-
-        def newSession(self):
-            raise RuntimeError("no child sessions here")
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    wrapper = _NoChild(spark)
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    df = spark.range(10)
-    with loop_session(wrapper, 1000) as ls:
-        assert ls._child is None and ls._fallback is not None
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "1"
-        assert ls.handoff(df) is df
-        assert ls.handback(df) is df
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
 def test_loop_session_handoff_outside_scope_raises(spark):
     """A handoff before __enter__ or after __exit__ would return a
     frame whose backing views are gone (or never created) — both must
@@ -405,9 +361,8 @@ def test_loop_session_handoff_outside_scope_raises(spark):
 
 
 def test_loop_session_nested_scopes_same_thread(spark):
-    """Nested loops on one thread were a hard error under loop_conf
-    (shared session conf); with per-loop child sessions they are
-    independent and both compute correctly."""
+    """Nested loops on one thread run on separate child sessions:
+    they are independent and both compute correctly."""
     from pyspark.sql import functions as F
 
     from datafusion_archive_spark.operators.util import loop_session
@@ -499,32 +454,6 @@ def test_loop_session_child_inherits_runtime_confs(spark):
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-
-
-def test_loop_session_fallback_warns(spark):
-    """Degrading to the caller-session loop_conf scope reverts every
-    isolation guarantee the docstrings promise — it must be loud
-    (RuntimeWarning), not silent (r14 review)."""
-    import warnings as _warnings
-
-    from datafusion_archive_spark.operators.util import loop_session
-
-    class _NoChild:
-        def __init__(self, real):
-            self._real = real
-
-        def newSession(self):
-            raise RuntimeError("no child sessions here")
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    with _warnings.catch_warnings(record=True) as caught:
-        _warnings.simplefilter("always")
-        with loop_session(_NoChild(spark), 1000) as ls:
-            assert ls._fallback is not None
-    msgs = [str(w.message) for w in caught if w.category is RuntimeWarning]
-    assert any("degrading to the locked loop_conf" in m for m in msgs)
 
 
 def test_sweep_scale_check_covers_small_log_and_plain_mode(tmp_path):

@@ -1,7 +1,6 @@
 """Round-15 contracts: bounded child-session reuse in loop_session
-(VERDICT r14 #2), the semantic-conf clone warning (VERDICT r14 #4),
-the connect-style detection fallback (ADVICE r14), and the
-shuffle-signal cap on salt_count is pinned in test_round14.py's
+(VERDICT r14 #2) and the semantic-conf clone warning (VERDICT r14 #4);
+the shuffle-signal cap on salt_count is pinned in test_round14.py's
 updated test_salt_count_shuffle_partitions_signal.
 """
 
@@ -9,8 +8,6 @@ from __future__ import annotations
 
 import threading
 import warnings
-
-import pytest
 
 from datafusion_archive_spark.operators import util
 from datafusion_archive_spark.operators.util import (
@@ -211,37 +208,6 @@ def test_nonsemantic_conf_clone_failure_stays_silent(spark):
         with loop_session(spark, 1000) as ls:
             assert ls._child is not None
     assert not [w for w in caught if w.category is RuntimeWarning]
-
-
-# ---------------------------------------------------------------- #
-# ADVICE r14: connect-style sessions take the loop_conf fallback    #
-# ---------------------------------------------------------------- #
-
-
-def test_connect_style_session_takes_fallback(spark):
-    """A session without _jsc (Spark Connect analyzes lazily
-    server-side) must NOT take the child route: a handed-back frame
-    would resolve its dropped handoff view only after the scope
-    exits. The scope degrades to loop_conf with the documented
-    RuntimeWarning."""
-
-    class _ConnectLike:
-        _jsc = None
-
-        def __init__(self, real):
-            self._real = real
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-    wrapper = _ConnectLike(spark)
-    df = spark.range(5)
-    with pytest.warns(RuntimeWarning, match="connect-style"):
-        with loop_session(wrapper, 1000) as ls:
-            assert ls._child is None and ls._fallback is not None
-            # fallback semantics: identity handoff/handback
-            assert ls.handoff(df) is df
-            assert ls.handback(df) is df
 
 
 def test_iterative_query_after_pool_adoption(spark, sf_dir):

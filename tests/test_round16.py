@@ -59,19 +59,11 @@ def test_ngram_jaccard_unique_id_precondition_pinned(spark):
 
 def test_loop_parts_is_the_single_width_authority(spark):
     """ADVICE r15: pagerank pre-partitions its contribution cache at
-    the loop width and relied on the private loop_conf._parts; both
-    now derive from the public util.loop_parts. Pin (a) that
-    loop_conf's width IS loop_parts' for representative sizes, and
-    (b) that a frame laid out at that width satisfies the follow-up
-    aggregate's distribution — no second Exchange (the property the
-    layout exists to buy)."""
-    from datafusion_archive_spark.operators.util import (
-        loop_conf,
-        loop_parts,
-    )
-
-    for n in (1, 10_000, 5_000_000, 2_000_000_000):
-        assert loop_conf(spark, n)._parts == loop_parts(spark, n)
+    the loop width, and loop_session sets its child's shuffle width,
+    both from the public util.loop_parts. Pin that a frame laid out
+    at that width satisfies the follow-up aggregate's distribution —
+    no second Exchange (the property the layout exists to buy)."""
+    from datafusion_archive_spark.operators.util import loop_parts
 
     parts = loop_parts(spark, 100_000)
     laid_out = (
