@@ -27,7 +27,7 @@ The reference engine has no dedup surface; this is north-star work
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from datafusion_archive_spark.functions import text as TX

@@ -13,6 +13,11 @@ plan it, and all shuffles key on node ids. The reference has no graph
 surface at all (``/root/reference/ROADMAP.md`` stops at scalar
 queries); these follow the classic MapReduce formulations
 (compact-forward triangle counting; power-iteration PageRank).
+
+The one exception is PageRank on a graph at or below the edge cap
+(_BROADCAST_EDGE_CAP): its whole power iteration runs as one
+mapInArrow task over the edge list. Above the cap it is the
+distributed join + aggregate loop.
 """
 
 from __future__ import annotations
@@ -36,7 +41,9 @@ from datafusion_archive_spark.operators.util import (
 #: relation is broadcast TWICE (once per attach side) — still inside
 #: the executor broadcast budget with the 8g session, which is what
 #: the cap is calibrated against. A web-scale graph exceeds the cap
-#: and both attach joins shuffle on the node id instead.
+#: and both attach joins shuffle on the node id instead. pagerank uses
+#: the same cap to choose its one-task path (at most 4M directed
+#: edges, two longs each, in one Python worker).
 _BROADCAST_EDGE_CAP = 2_000_000
 
 def _materialize(fn):
@@ -233,6 +240,50 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     )
 
 
+def _pagerank_kernel(damping: float, iterations: int):
+    """mapInArrow kernel for the one-task PageRank path: the whole
+    directed edge list arrives as the batches of ONE task, node ids
+    are densified to 0..n-1, and all power iterations run in NumPy.
+    Yields one (node, rank) batch, ranks scaled to mean 1; yields
+    nothing for an empty edge list."""
+
+    def fn(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        if not t.num_rows:
+            return
+        m = t.num_rows
+        ids, inv = np.unique(
+            np.concatenate(
+                [t.column("src").to_numpy(), t.column("dst").to_numpy()]
+            ),
+            return_inverse=True,
+        )
+        src, dst = inv[:m], inv[m:]
+        n = len(ids)
+        deg = np.bincount(src, minlength=n).astype(np.float64)
+        base = (1.0 - damping) / float(n)
+        r = np.full(n, 1.0 / float(n))
+        for _ in range(iterations):
+            # r/deg per source, summed per dst: the distributed
+            # path's sum(r / deg), same division
+            r = base + damping * np.bincount(
+                dst, weights=(r / deg)[src], minlength=n
+            )
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(ids, type=t.schema.field("src").type),
+             pa.array(r * float(n))],
+            names=["node", "rank"],
+        )
+
+    return fn
+
+
 def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
@@ -240,30 +291,37 @@ def pagerank(
 ) -> DataFrame:
     """Power-iteration PageRank over an undirected unique edge list;
     returns (node, rank) with ranks scaled to mean 1 (sum = n_nodes).
+    An empty edge list gives no rows.
 
     r_{i+1}(v) = (1-d)/N + d · Σ_{u~v} r_i(u)/deg(u). Every node in an
     undirected graph has deg ≥ 1, so there are no dangling nodes and
     rank mass is conserved by construction.
 
-    Scale: each iteration is one join of the rank vector against the
-    directed edge list plus one aggregate — both shuffles keyed on
-    node id. The iteration loop runs on a dedicated child session
-    (AQE off, width from the measured graph — see operators.util.
-    loop_session), so the caller's session conf is never narrowed
-    and concurrent queries on it are unaffected (VERDICT r13 #2).
-    localCheckpoint per iteration truncates lineage (same discipline
-    as dedup.connected_components); the only driver-side values are
-    the scalar node count and the fixed iteration count."""
+    The path is chosen by one real count of the directed edge list:
+
+    - at most _BROADCAST_EDGE_CAP undirected edges (the cap
+      triangle_stats uses for its edge-sized broadcast): the returned
+      frame is lazy and runs the whole power iteration as ONE
+      mapInArrow task over the coalesced edge list (one NumPy
+      bincount per iteration). No edge or rank row goes through the
+      driver and no loop job runs: the loop is bound by per-job
+      fixed cost, not data, and a graph this size is a few tens of
+      MB of Arrow in one worker.
+    - above it: each iteration is one join of the rank vector against
+      the directed edge list plus one aggregate, both keyed on node
+      id. The loop runs on a dedicated child session (AQE off, width
+      from the measured graph — see operators.util.loop_session), so
+      the caller's session conf is never narrowed (VERDICT r13 #2);
+      localCheckpoint per iteration truncates lineage (same
+      discipline as dedup.connected_components); the only
+      driver-side values are the scalar counts and the iteration
+      count."""
     # cached BEFORE anything derives from it (round 15): the upstream
     # edge construction (a basket self-join for co-occurrence graphs)
-    # is the data-sized stage, and `directed` feeds deg.count, BOTH
-    # sides of the out-degree join below (deg is itself derived from
-    # directed), and — transitively — every iteration. Uncached, one
-    # pagerank call ran the basket self-join three times before the
-    # loop even started (deg.count once, out.count twice — the join's
-    # left side and the deg aggregate under it are separate uncached
-    # branches of one action); 2 longs/edge, spillable, released via
-    # the registry like every operator-internal persist.
+    # is the data-sized stage, and `directed` feeds the count below
+    # and then either the one-task kernel or every step of the
+    # distributed loop; 2 longs/edge, spillable, released via the
+    # registry like every operator-internal persist.
     directed = cached(
         edges.select("src", "dst").unionAll(
             edges.select(
@@ -271,6 +329,15 @@ def pagerank(
             )
         )
     )
+    # materializes the cache under the CALLER's conf
+    n_directed = _materialize(directed.count)
+    # the cap counts undirected edges; the directed list holds each twice
+    if n_directed <= 2 * _BROADCAST_EDGE_CAP:
+        node_type = directed.schema["src"].dataType.simpleString()
+        return directed.coalesce(1).mapInArrow(
+            _pagerank_kernel(damping, iterations),
+            f"node {node_type}, rank double",
+        )
     deg = directed.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -282,10 +349,6 @@ def pagerank(
     # the whole cached directed edge list just to attach one long per
     # node. Beyond the cap both sides shuffle on node id, unchanged.
     _deg_src = deg.withColumnRenamed("node", "src")
-    # the loop width must be known BEFORE the contribution table is
-    # laid out (below), so count the directed list — cheap, it is
-    # already cache-materialized by deg.count() above
-    n_directed = _materialize(directed.count)
     parts = loop_parts(edges.sparkSession, n_directed + n)
     # pre-partition the contribution table BY dst AT THE LOOP WIDTH
     # (round 15, guide §2.4 — operations keyed the same way share one

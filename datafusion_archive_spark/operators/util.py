@@ -306,8 +306,8 @@ def _child_pool_for(spark) -> list:
 
 
 class loop_session:
-    """The scope every iterative loop (connected-components
-    propagation, PageRank power iteration) runs in.
+    """The scope every iterative Spark-job loop (connected-components
+    propagation, PageRank power iteration above the edge cap) runs in.
 
     AQE re-plans and materializes every tiny per-round query stage,
     and the session's shuffle width is sized for fact scans, not the
@@ -356,9 +356,10 @@ class loop_session:
     defaults.
     """
 
-    #: curated fallback list if conf.getAll is unavailable: the confs
-    #: whose divergence between caller and child changes SCAN/EXPR
-    #: semantics (not just performance) on a mid-loop recomputation
+    #: the confs whose divergence between caller and child changes
+    #: SCAN/EXPR semantics (not just performance) on a mid-loop
+    #: recomputation: a clone of one of these that the child refuses
+    #: warns, while other refusals (static entries) stay silent
     _SEMANTIC_CONF_KEYS = (
         "spark.sql.session.timeZone",
         "spark.sql.legacy.parquet.nanosAsLong",
@@ -389,21 +390,10 @@ class loop_session:
         # touch py4j, and keys a previous scope set that the caller no
         # longer carries are unset, so reuse cannot leak conf across
         # loops.
-        try:
-            confs = dict(self._spark.conf.getAll)
-        except Exception:
-            confs = {}
-            for key in self._SEMANTIC_CONF_KEYS:
-                try:
-                    confs[key] = self._spark.conf.get(key)
-                except Exception:
-                    pass
+        confs = dict(self._spark.conf.getAll)
         current = {}
         if reused:
-            try:
-                current = dict(child.conf.getAll)
-            except Exception:
-                current = {}
+            current = dict(child.conf.getAll)
             for key in current:
                 if key not in confs:
                     try:

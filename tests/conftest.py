@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 
 import pytest
@@ -53,3 +54,26 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn`` under a fresh job group and returns
+    (result, job count) once the listener bus has delivered every job
+    event."""
+
+    def run(fn):
+        sc = spark.sparkContext
+        group = f"job-count-pin-{next(_JOB_GROUPS)}"
+        sc.setJobGroup(group, group, False)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

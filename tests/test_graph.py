@@ -8,9 +8,11 @@ import math
 from collections import defaultdict
 from itertools import combinations
 
+import pytest
 from pyspark.sql import functions as F
 
 from datafusion_archive_spark.operators import graph as G
+from datafusion_archive_spark.operators.util import release_caches
 from datafusion_archive_spark.plans import summarize
 from datafusion_archive_spark.queries import pipeline9 as P9
 
@@ -62,8 +64,20 @@ class TestTriangles:
         assert s.joins.count("BroadcastNestedLoopJoin") <= 2
 
 
+#: jobs one ``q_graph_pagerank`` build + collect runs at sf0.001 on
+#: the one-task path: the edge-list count under the caller's conf
+#: (with its AQE query-stage jobs) plus the collect
+PR_JOBS = 7
+
+
 class TestPageRank:
-    def test_matches_numpy_power_iteration(self, spark):
+    @pytest.mark.parametrize("path", ["one_task", "distributed"])
+    def test_matches_numpy_power_iteration(self, spark, monkeypatch, path):
+        """Both paths against a pure-Python power iteration; the
+        distributed loop is forced by a zero edge cap, since no test
+        graph is large enough to reach it."""
+        if path == "distributed":
+            monkeypatch.setattr(G, "_BROADCAST_EDGE_CAP", 0)
         edges = _python_graph(spark)
         adj = defaultdict(set)
         for a, b in edges:
@@ -112,3 +126,21 @@ class TestPageRank:
             for r in P9.q_graph_pagerank(spark, SF).collect()
         }
         assert ranks[hi.node] > ranks[lo.node]
+
+    def test_empty_graph_gives_no_rows(self, spark):
+        ranks = G.pagerank(spark.createDataFrame([], "src long, dst long"))
+        assert ranks.columns == ["node", "rank"]
+        assert ranks.collect() == []
+
+    def test_job_count_pinned(self, spark, jobs_of):
+        """One build + collect on the one-task path runs PR_JOBS jobs
+        (the distributed loop ran 34): a change here altered the job
+        structure, not noise."""
+        # earlier tests leave the same edge list cached; a warm cache
+        # would skip the build jobs
+        release_caches()
+        rows, n = jobs_of(
+            lambda: P9.q_graph_pagerank(spark, SF).collect()
+        )
+        assert rows
+        assert n == PR_JOBS

@@ -12,7 +12,6 @@ loop scope, and the engine runs on classic (py4j) sessions only.
 
 from __future__ import annotations
 
-import itertools
 import warnings
 
 import pytest
@@ -26,8 +25,6 @@ from datafusion_archive_spark.operators.util import loop_session
 #: of the AQE-off loop on the child session
 CC_JOBS = 24
 
-_GROUPS = itertools.count()
-
 
 def _pairs():
     # the chain + star + singleton pairs + triangle graph of
@@ -40,28 +37,14 @@ def _pairs():
     )
 
 
-def _jobs_of(spark, fn):
-    """Run ``fn`` under a fresh job group; return (result, job count)
-    once the listener bus has delivered every job event."""
-    sc = spark.sparkContext
-    group = f"loop-scope-pin-{next(_GROUPS)}"
-    sc.setJobGroup(group, group, False)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_connected_components_job_count_pinned(spark):
+def test_connected_components_job_count_pinned(spark, jobs_of):
     """Two calls in one session — the second runs on the pooled child
     the first returned — each run exactly CC_JOBS jobs and give the
     same labels."""
     pdf = spark.createDataFrame(_pairs(), "id_a long, id_b long")
     counts, labels = [], []
     for _ in range(2):
-        result, n = _jobs_of(spark, lambda: dedup.connected_components(pdf))
+        result, n = jobs_of(lambda: dedup.connected_components(pdf))
         counts.append(n)
         labels.append(sorted(tuple(r) for r in result.collect()))
     assert counts == [CC_JOBS, CC_JOBS]
