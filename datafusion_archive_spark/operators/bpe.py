@@ -2,26 +2,28 @@
 pass (Sennrich et al. 2016) expressed Spark-first.
 
 Scale design: the ONLY corpus-sized operation is the initial word-
-frequency aggregation (one scan, one shuffle on the word). Every merge
-iteration runs over the DISTINCT-WORD table — vocab-sized, orders of
-magnitude below the corpus at any scale — and the only data that ever
-reaches the driver is the single argmax pair per iteration (bounded:
-``n_merges`` rows total, the same documented pattern as the IVF probed-
-id collect in operators/similarity.py). Pair extraction and the merge
-rewrite are pure JVM expressions (array transform + regexp_replace), no
-Python in the loop.
+frequency aggregation (one scan, one shuffle on the word). The JVM
+then splits each distinct word into its symbol string, and all merge
+rounds run in Python as ONE mapInArrow task over that DISTINCT-WORD
+table (operators.util.one_task) — vocab-sized, orders of magnitude
+below the corpus at any scale (31 rows at every shipped scale), so the
+loop is bound by per-job fixed cost, not data, and no per-merge job
+runs. Encoding (bpe_encode) is pure JVM expressions (array transform
++ regexp_replace).
 
 The reference engine has no tokenizer surface (its roadmap stops at
 batch SQL, ``/root/reference/ROADMAP.md:36-56``); this operator belongs
 to the training-data-pipeline extension mandate. Correctness is pinned
 differentially against a pure-Python reference BPE in
-tests/test_round5b.py — the op is iterative and not SQL-expressible, so
-its registry row is rows-only by design.
+tests/test_round5b.py and by an exact DuckDB oracle of the unrolled
+trainer (queries/pipeline4._bpe_merges_oracle_sql).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from datafusion_archive_spark.operators.util import one_task
 
 #: end-of-word marker, as in the original BPE formulation — keeps
 #: merges from crossing word boundaries when pairs are counted.
@@ -55,97 +57,97 @@ def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _symbols(word):
+    """A word's symbol string: its characters space-separated, then the
+    end-of-word mark. Java's ``(.)`` does not match line terminators
+    such as U+0085, so they stay glued to the next character."""
+    return F.concat(
+        F.trim(F.regexp_replace(word, "(.)", "$1 ")), F.lit(" " + EOW)
+    )
+
+
+def _bpe_kernel(n_merges: int):
+    """util.one_task kernel: all ``n_merges`` training rounds over the
+    (freq, syms) table in Python. ``syms`` is split on the spaces
+    _symbols put in, never re-split from the word."""
+
+    def fn(t):
+        from collections import Counter
+
+        import pyarrow as pa
+
+        vocab = Counter()
+        for syms, freq in zip(t["syms"].to_pylist(), t["freq"].to_pylist()):
+            if syms is not None and freq is not None:
+                vocab[tuple(syms.split(" "))] += freq
+        merges = []
+        for idx in range(n_merges):
+            counts = Counter()
+            for ws, f in vocab.items():
+                for pair in zip(ws, ws[1:]):
+                    counts[pair] += f
+            if not counts:
+                break
+            # ties break on the joined pair string, not on the tuple:
+            # ("a", "b") < ("a\x01", "c") but "a\x01 c" < "a b"
+            (left, right), n = min(
+                counts.items(), key=lambda kv: (-kv[1], " ".join(kv[0]))
+            )
+            merges.append((idx, left, right, n))
+            new = Counter()
+            for ws, f in vocab.items():
+                # left-to-right, non-overlapping: "a a a" under merge
+                # (a,a) becomes "aa a"
+                out, i = [], 0
+                while i < len(ws):
+                    if ws[i : i + 2] == (left, right):
+                        out.append(left + right)
+                        i += 2
+                    else:
+                        out.append(ws[i])
+                        i += 1
+                new[tuple(out)] += f
+            vocab = new
+        if merges:
+            types = [pa.int32(), pa.string(), pa.string(), pa.int64()]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, ty) for c, ty in zip(zip(*merges), types)],
+                names=["merge_idx", "left", "right", "pair_freq"],
+            )
+
+    return fn
+
+
+def _train(words: DataFrame, n_merges: int) -> DataFrame:
+    """The lazy merge-table frame over a (word, freq) table: the JVM
+    symbolizes each word, then one task runs every merge round."""
+    return one_task(
+        words.select("freq", _symbols(F.col("word")).alias("syms")),
+        _bpe_kernel(n_merges),
+        "merge_idx INT, left STRING, right STRING, pair_freq BIGINT",
+    )
+
+
 def bpe_merges(words: DataFrame, n_merges: int = 10) -> list[tuple]:
     """Learn the first ``n_merges`` BPE merges from a (word, freq)
-    table. Returns ``[(merge_idx, left, right, pair_freq), …]`` in
-    merge order.
+    table of space-free words (as word_frequencies produces). Returns
+    ``[(merge_idx, left, right, pair_freq), …]`` in merge order.
 
-    Each iteration: explode adjacent symbol pairs weighted by word
-    frequency, aggregate, take the argmax (ties break on the pair
-    string so the result is deterministic), then rewrite the symbol
-    strings with a left-to-right non-overlapping regex replace — the
-    exact greedy semantics of the reference BPE algorithm.
-    """
-    spark = words.sparkSession
-    # symbol representation: space-separated chars + end-of-word mark
-    sym = words.select(
-        "freq",
-        F.concat(
-            F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")),
-            F.lit(" " + EOW),
-        ).alias("syms"),
-    )
-    sym = sym.cache()
-    # the parent of the CURRENT sym — unpersisted only after the next
-    # argmax job has materialized sym's own cache (round 16, VERDICT
-    # r15 #5): the old loop ran an explicit nxt.count() per merge just
-    # to materialize before dropping the parent, doubling the
-    # per-merge job count; the very next iteration's argmax scan
-    # materializes the cache anyway, so deferring the unpersist by one
-    # iteration gets the same safety with half the jobs (2N+1 -> N+1
-    # for N merges). If an evicted partition ever forces recompute,
-    # the lineage chain (n_merges nested regexp_replaces) is intact —
-    # slower, never wrong.
-    prev: DataFrame | None = None
-    merges: list[tuple] = []
-    for idx in range(n_merges):
-        arr = F.split(F.col("syms"), " ")
-        # fully-merged words have one symbol left — no pairs (and
-        # sequence(0, -1) would run DESCENDING, indexing out of range)
-        pairs = sym.filter(F.size(arr) >= 2).select(
-            "freq",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size(arr) - 2),
-                    # symbols are space-free by construction, so the
-                    # space-joined pair splits back unambiguously
-                    lambda i: F.concat_ws(
-                        " ",
-                        F.element_at(arr, i + 1),
-                        F.element_at(arr, i + 2),
-                    ),
-                )
-            ).alias("pair"),
-        )
-        top = (
-            pairs.groupBy("pair")
-            .agg(F.sum("freq").alias("n"))
-            .orderBy(F.desc("n"), "pair")
-            .limit(1)
-            .collect()
-        )
-        # the argmax scan above just materialized sym's cache, so the
-        # previous round's parent is now safe to release
-        if prev is not None:
-            prev.unpersist()
-            prev = None
-        if not top:
-            break
-        left, right = top[0]["pair"].split(" ")
-        merges.append((idx, left, right, top[0]["n"]))
-        # left-to-right, non-overlapping: "a a a" under merge (a,a)
-        # becomes "aa a", matching the reference implementation
-        pat = f"(?<!\\S){_quote(left)} {_quote(right)}(?!\\S)"
-        repl = (left + right).replace("\\", "\\\\").replace("$", "\\$")
-        nxt = sym.withColumn(
-            "syms", F.regexp_replace("syms", pat, repl)
-        ).cache()
-        prev, sym = sym, nxt
-    sym.unpersist()
-    if prev is not None:
-        prev.unpersist()
-    return merges
+    Each round: count adjacent symbol pairs weighted by word
+    frequency, take the argmax (ties break on the space-joined pair
+    string so the result is deterministic), then rewrite every
+    word's symbols left to right without overlap — the exact greedy
+    semantics of the reference BPE algorithm."""
+    return [tuple(r) for r in _train(words, n_merges).collect()]
 
 
 def bpe_merge_table(
     spark, docs: DataFrame, n_merges: int = 10, text_col: str = "text"
 ) -> DataFrame:
-    """End-to-end: corpus -> ordered merge table DataFrame with columns
-    (merge_idx, left, right, pair_freq)."""
-    rows = bpe_merges(word_frequencies(docs, text_col), n_merges)
-    return spark.createDataFrame(
-        rows, "merge_idx INT, left STRING, right STRING, pair_freq BIGINT"
-    )
+    """End-to-end: corpus -> lazy ordered merge table with columns
+    (merge_idx, left, right, pair_freq); an empty corpus gives no
+    rows."""
+    return _train(word_frequencies(docs, text_col), n_merges)
 
 
 def bpe_encode(
@@ -181,9 +183,7 @@ def bpe_encode(
     docs = spread(docs)
 
     def encode_word(w):
-        s = F.concat(
-            F.trim(F.regexp_replace(w, "(.)", "$1 ")), F.lit(" " + EOW)
-        )
+        s = _symbols(w)
         for _, left, right, _ in merges:
             pat = f"(?<!\\S){_quote(left)} {_quote(right)}(?!\\S)"
             repl = (left + right).replace("\\", "\\\\").replace("$", "\\$")

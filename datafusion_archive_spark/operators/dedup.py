@@ -36,6 +36,7 @@ from datafusion_archive_spark.operators.util import (
     BROADCAST_NODE_CAP as _BROADCAST_NODE_CAP,
     cached,
     loop_session as _loop_session,
+    one_task,
     spread,
 )
 
@@ -587,7 +588,39 @@ _JUMPS_PER_ROUND = 1
 #: _BROADCAST_NODE_CAP is shared with graph.pagerank — see
 #: operators.util.BROADCAST_NODE_CAP for the sizing rationale
 #: (honest one-real-count hint vs Catalyst's carried checkpoint
-#: estimates; 2M rows x ~32 B ~= 64 MB broadcast).
+#: estimates; 2M rows x ~32 B ~= 64 MB broadcast). It also bounds the
+#: edge list connected_components labels in one task.
+
+
+def _cc_kernel(t):
+    """util.one_task kernel: NumPy min-label union-find over the
+    directed edge list, ids densified in sorted order (min label = min
+    id). Each round hooks every edge's u-root onto its smaller v-label,
+    then jumps pointers to the roots. Hooking roots, not nodes, keeps
+    rounds near log(n) (node labels: ~n/2 rounds on a shuffled path)."""
+    import numpy as np
+    import pyarrow as pa
+
+    ids, inv = np.unique(
+        np.concatenate([t["u"].to_numpy(), t["v"].to_numpy()]),
+        return_inverse=True,
+    )
+    u, v = np.split(inv, 2)
+    lab = prev = np.arange(len(ids))
+    while True:
+        lab = lab.copy()
+        np.minimum.at(lab, lab[u], lab[v])
+        while not np.array_equal(lab[lab], lab):
+            lab = lab[lab]
+        if np.array_equal(lab, prev):
+            break
+        prev = lab
+    typ = t.schema.field("u").type
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids, type=typ), pa.array(ids[lab], type=typ)],
+        names=["node", "component"],
+    )
+
 
 def _rewrap_checkpoint(ck: DataFrame) -> DataFrame:
     """Re-wrap an (eagerly) checkpointed DataFrame's materialized
@@ -612,10 +645,14 @@ def connected_components(
     max_iterations: int = 50,
 ) -> DataFrame:
     """Resolve near-duplicate candidate pairs into clusters: connected
-    components by iterative min-label propagation, the standard way
-    corpus dedup turns pairwise LSH matches into keep-one groups at
-    scale (no graph library needed — each iteration is a join + a
-    min-aggregate, all shuffles on the node id).
+    components, the standard way corpus dedup turns pairwise LSH
+    matches into keep-one groups at scale.
+
+    One real count of the de-duplicated directed edge list picks the
+    path. At most _BROADCAST_NODE_CAP edges (nodes <= edges): a lazy
+    util.one_task frame labels the whole graph (_cc_kernel), with no
+    round limit. Above it: min-label propagation, each iteration a
+    join + a min-aggregate, all shuffles on the node id.
 
     Each node starts labeled with itself; every iteration each node
     takes the min label over its neighbors in the graph UNION the
@@ -635,29 +672,32 @@ def connected_components(
     cluster. Only nodes that appear in ``pairs`` are returned —
     singletons never enter the pair list by construction.
 
-    Raises ``RuntimeError`` if labels were still changing after
-    ``max_iterations`` — returning silently-split clusters would be a
-    wrong answer, and a pathological long-chain graph (diameter >
-    max_iterations) is a caller decision: raise the cap or switch to a
-    path-doubling variant.
+    Above the cap only, raises ``RuntimeError`` if labels were still
+    changing after ``max_iterations`` — returning silently-split
+    clusters would be a wrong answer, and a pathological long-chain
+    graph (diameter > max_iterations) is a caller decision: raise the
+    cap or switch to a path-doubling variant.
     """
-    edges = (
+    # the de-dup shuffle of the raw pair list (potentially the large
+    # input) runs HERE, under the caller's conf — full shuffle width
+    # and AQE apply to the one data-sized stage; the lazy one-task
+    # result reads the cache after this returns.
+    edges = cached(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .unionByName(
             pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
         )
         .distinct()
-        .persist()
     )
+    n_edges = edges.count()
+    if n_edges <= _BROADCAST_NODE_CAP:
+        typ = edges.schema["u"].dataType.simpleString()
+        return cached(
+            one_task(edges, _cc_kernel, f"node {typ}, component {typ}")
+        )
     labels = edges.select(F.col("u").alias("node")).distinct().withColumn(
         "component", F.col("node")
     ).persist()
-    # the de-dup shuffle of the raw pair list (potentially the large
-    # input) runs HERE, under the caller's conf — full shuffle width
-    # and AQE apply to the one data-sized stage. Counting edges and
-    # nodes materializes both persisted frames and gives the real
-    # sizes the loop scope below is derived from.
-    n_edges = edges.count()
     # one real count of the (round-invariant) node set decides the
     # join strategy for every label-sized frame below: the stats
     # reset in _rewrap_checkpoint leaves Catalyst with no size

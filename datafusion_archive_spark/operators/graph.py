@@ -30,6 +30,7 @@ from datafusion_archive_spark.operators.util import (
     cached,
     loop_parts,
     loop_session,
+    one_task,
 )
 
 #: broadcast the ADJACENCY table (node-keyed, edge-sized payload: one
@@ -241,30 +242,20 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
 
 
 def _pagerank_kernel(damping: float, iterations: int):
-    """mapInArrow kernel for the one-task PageRank path: the whole
-    directed edge list arrives as the batches of ONE task, node ids
-    are densified to 0..n-1, and all power iterations run in NumPy.
-    Yields one (node, rank) batch, ranks scaled to mean 1; yields
-    nothing for an empty edge list."""
+    """util.one_task kernel for the one-task PageRank path: the whole
+    directed edge list arrives as one table, node ids are densified
+    to 0..n-1, and all power iterations run in NumPy. Yields one
+    (node, rank) batch, ranks scaled to mean 1."""
 
-    def fn(batches):
+    def fn(t):
         import numpy as np
         import pyarrow as pa
 
-        batches = list(batches)
-        if not batches:
-            return
-        t = pa.Table.from_batches(batches)
-        if not t.num_rows:
-            return
-        m = t.num_rows
         ids, inv = np.unique(
-            np.concatenate(
-                [t.column("src").to_numpy(), t.column("dst").to_numpy()]
-            ),
+            np.concatenate([t["src"].to_numpy(), t["dst"].to_numpy()]),
             return_inverse=True,
         )
-        src, dst = inv[:m], inv[m:]
+        src, dst = np.split(inv, 2)
         n = len(ids)
         deg = np.bincount(src, minlength=n).astype(np.float64)
         base = (1.0 - damping) / float(n)
@@ -300,13 +291,10 @@ def pagerank(
     The path is chosen by one real count of the directed edge list:
 
     - at most _BROADCAST_EDGE_CAP undirected edges (the cap
-      triangle_stats uses for its edge-sized broadcast): the returned
-      frame is lazy and runs the whole power iteration as ONE
-      mapInArrow task over the coalesced edge list (one NumPy
-      bincount per iteration). No edge or rank row goes through the
-      driver and no loop job runs: the loop is bound by per-job
-      fixed cost, not data, and a graph this size is a few tens of
-      MB of Arrow in one worker.
+      triangle_stats uses for its edge-sized broadcast): a lazy
+      util.one_task frame runs the whole power iteration (one NumPy
+      bincount per iteration); a graph this size is a few tens of MB
+      of Arrow in one worker.
     - above it: each iteration is one join of the rank vector against
       the directed edge list plus one aggregate, both keyed on node
       id. The loop runs on a dedicated child session (AQE off, width
@@ -334,7 +322,8 @@ def pagerank(
     # the cap counts undirected edges; the directed list holds each twice
     if n_directed <= 2 * _BROADCAST_EDGE_CAP:
         node_type = directed.schema["src"].dataType.simpleString()
-        return directed.coalesce(1).mapInArrow(
+        return one_task(
+            directed,
             _pagerank_kernel(damping, iterations),
             f"node {node_type}, rank double",
         )

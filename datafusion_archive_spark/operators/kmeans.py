@@ -9,7 +9,7 @@ corpus shuffle), the nearest-centroid argmin is a window over the
 per-vector candidate rows, and the recentering aggregate shuffles only
 (list_id, partial component sums). The ONLY driver-side data is the
 k x dim centroid matrix per iteration (same bounded-collect pattern as
-the BPE argmax and the IVF probed-id set). Assignment ties break on
+the IVF probed-id set). Assignment ties break on
 list_id, so iteration is deterministic up to floating-point summation
 order in the means.
 

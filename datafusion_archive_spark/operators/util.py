@@ -194,6 +194,22 @@ def loop_parts(spark, n_rows: int) -> int:
 BROADCAST_NODE_CAP = 2_000_000
 
 
+def one_task(df: DataFrame, kernel, schema: str) -> DataFrame:
+    """The lazy frame ``df.coalesce(1).mapInArrow(...)``: ``kernel``
+    gets ALL rows as one ``pyarrow.Table`` and yields RecordBatches of
+    ``schema``; empty input gives no rows. Bounded iterative operators
+    run their whole loop this way instead of one Spark job per round."""
+
+    def fn(batches):
+        import pyarrow as pa
+
+        batches = list(batches)
+        if batches and sum(b.num_rows for b in batches):
+            yield from kernel(pa.Table.from_batches(batches))
+
+    return df.coalesce(1).mapInArrow(fn, schema)
+
+
 #: Over-decomposition factor for salted two-phase top-k windows: the
 #: phase-1 sort should fan out to ~4 tasks per core so stragglers and
 #: residual per-group size variance amortize (the same reasoning as

@@ -139,10 +139,9 @@ def q_dedup_minhash_signatures(spark, sf):
 
 
 def q_dedup_clusters(spark, sf):
-    """Near-dup clusters: LSH pairs → iterative min-label connected
-    components → (keep_id, cluster_size). The DuckDB oracle resolves
-    the same components with WITH RECURSIVE transitive closure —
-    exact agreement pins the iterative Spark loop's fixpoint."""
+    """Near-dup clusters: LSH pairs → connected components →
+    (keep_id, cluster_size). The DuckDB oracle resolves the same
+    components with WITH RECURSIVE transitive closure."""
     return dedup.dedup_clusters(_t(spark, sf, "documents"), threshold=0.25)
 
 
@@ -501,7 +500,7 @@ def _minhash_lsh_oracle() -> str:
 def _dedup_clusters_oracle() -> str:
     """SQL twin of dedup.dedup_clusters: the same LSH pairs resolved
     into connected components by a WITH RECURSIVE transitive closure
-    (exact agreement pins the Spark min-label loop's fixpoint)."""
+    (exact agreement pins the Spark component labels)."""
     return (
         "WITH RECURSIVE "
         + _minhash_pair_ctes(0.25).strip().removeprefix("WITH")

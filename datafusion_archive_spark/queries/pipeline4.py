@@ -367,8 +367,7 @@ def q_bpe_merges(spark, sf):
     stages — _bpe_merges_oracle_sql; merge k IS the m{k} stage row);
     tests/test_round5b.py additionally pins it differentially against
     a pure-Python reference BPE. Scale story in operators/bpe.py: one
-    corpus-sized word-count shuffle, then vocab-sized iterations with
-    only the per-iteration argmax row reaching the driver."""
+    corpus-sized word-count shuffle, then every merge in one task."""
     from datafusion_archive_spark.operators import bpe
 
     d = _t(spark, sf, "documents")

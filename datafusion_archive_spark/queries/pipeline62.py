@@ -169,7 +169,7 @@ def q_kmeans_lloyd(spark, sf):
     the first minimum over ids sorted ascending); an emptied cluster
     drops out of the collected centroid rows exactly as it dropped
     out of the old inner joins. The same bounded-collect pattern as
-    kmeans_train and the BPE argmax; the DuckDB oracle
+    kmeans_train; the DuckDB oracle
     (materialized-CTE unroll) pins the fixed point.
     """
     emb = cached(

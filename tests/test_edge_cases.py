@@ -108,7 +108,7 @@ def test_operators_handle_empty_input(spark):
     release_caches()
 
 
-def test_connected_components_empty_pairs(spark):
+def test_connected_components_empty_pairs(spark, cc_path):
     from datafusion_archive_spark.operators.dedup import (
         connected_components,
     )

@@ -20,10 +20,12 @@ from pyspark.sql import SparkSession
 from datafusion_archive_spark.operators import dedup
 from datafusion_archive_spark.operators.util import loop_session
 
-#: jobs one ``connected_components`` call runs on the graph below:
-#: the edge and node counts under the caller's conf plus the rounds
-#: of the AQE-off loop on the child session
-CC_JOBS = 24
+#: jobs one ``connected_components`` call runs on the graph below
+#: with the one-task cap forced to 0: the edge and node counts under
+#: the caller's conf plus the rounds of the AQE-off loop on the child
+#: session. The forced cap also turns the label broadcasts, and their
+#: broadcast jobs, off.
+CC_JOBS = 15
 
 
 def _pairs():
@@ -37,10 +39,12 @@ def _pairs():
     )
 
 
-def test_connected_components_job_count_pinned(spark, jobs_of):
+def test_connected_components_job_count_pinned(spark, jobs_of, monkeypatch):
     """Two calls in one session — the second runs on the pooled child
     the first returned — each run exactly CC_JOBS jobs and give the
-    same labels."""
+    same labels. The cap is forced to 0: the child session serves
+    only the distributed path, which no test graph reaches."""
+    monkeypatch.setattr(dedup, "_BROADCAST_NODE_CAP", 0)
     pdf = spark.createDataFrame(_pairs(), "id_a long, id_b long")
     counts, labels = [], []
     for _ in range(2):

@@ -1,0 +1,114 @@
+"""Bounded iterative operators run as one Arrow task
+(``operators.util.one_task``): the helper's contract, the job counts of
+the queries built on it, and the BPE trainer's semantics pins.
+
+Job counts are deterministic counters, not timings: a pin that moves
+means the job structure changed. Each pin warms its query once (the
+first build in a session runs cold-only jobs), then releases the
+operator caches and counts one build + collect at sf0.001.
+"""
+
+from __future__ import annotations
+
+import pytest
+from pyspark.sql import Row
+
+from datafusion_archive_spark.operators import bpe
+from datafusion_archive_spark.operators.util import one_task, release_caches
+from datafusion_archive_spark.queries import llm, pipeline4, pipeline60
+
+
+class TestOneTask:
+    def test_kernel_sees_every_row_in_one_call(self, spark):
+        import pyarrow as pa
+
+        def kernel(t):
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array([t.num_rows]),
+                    pa.array([sum(t["id"].to_pylist())]),
+                ],
+                names=["n", "s"],
+            )
+
+        df = spark.range(0, 100, numPartitions=7)
+        rows = one_task(df, kernel, "n long, s long").collect()
+        assert [tuple(r) for r in rows] == [(100, 4950)]
+
+    def test_empty_input_gives_no_rows(self, spark):
+        def kernel(t):
+            raise AssertionError("kernel called on empty input")
+
+        out = one_task(spark.range(0), kernel, "n long")
+        assert out.collect() == []
+        assert out.columns == ["n"]
+
+
+@pytest.mark.parametrize(
+    "query, pin",
+    [
+        (pipeline4.q_bpe_merges, lambda n: n == 2),
+        (pipeline4.q_bpe_encode_tokens, lambda n: n == 4),
+        # 13 or 14: the spread predates the one-task path (26 or 27
+        # then), so it is not a connected-components round
+        (llm.q_dedup_clusters, lambda n: n <= 14),
+        (pipeline60.q_dbscan_clusters, lambda n: n == 34),
+    ],
+    ids=["bpe_merges", "bpe_encode_tokens", "dedup_clusters",
+         "dbscan_clusters"],
+)
+def test_job_count_pinned(spark, sf_dir, jobs_of, query, pin):
+    query(spark, sf_dir).collect()
+    release_caches()
+    rows, n = jobs_of(lambda: query(spark, sf_dir).collect())
+    release_caches()
+    assert rows
+    assert pin(n), n
+
+
+def _merges(spark, words, n_merges):
+    df = spark.createDataFrame(words, "word string, freq bigint")
+    return bpe.bpe_merges(df, n_merges)
+
+
+class TestBpeSemantics:
+    def test_ties_break_on_joined_pair_string(self, spark):
+        # after merge 0 the word is ("\x01\x01", "\x01", "</w>"); the
+        # two remaining pairs tie at 1. As tuples ("\x01", "</w>") sorts
+        # first; as joined strings "\x01\x01 \x01" does ("\x01" < " ")
+        got = _merges(spark, [("\x01\x01\x01", 1)], 3)
+        assert got == [
+            (0, "\x01", "\x01", 2),
+            (1, "\x01\x01", "\x01", 1),
+            (2, "\x01\x01\x01", "</w>", 1),
+        ]
+
+    def test_null_rows_add_no_pairs(self, spark):
+        got = _merges(spark, [("ab", 2), (None, 5), ("cd", None)], 1)
+        assert got == [(0, "a", "b", 2)]
+
+    def test_line_terminators_stay_glued_to_the_next_char(self, spark):
+        # Java's (.) does not match U+0085 or U+2028, so the JVM
+        # symbolizes "a\x85b" as a, \x85b, </w> — the trainer must
+        # keep those symbols, not re-split the word per character
+        docs = spark.createDataFrame(
+            [Row(doc_id=1, text="a\u0085b a\u0085b x\u2028y")]
+        )
+        got = [
+            tuple(r) for r in bpe.bpe_merge_table(spark, docs, 4).collect()
+        ]
+        assert got == [
+            (0, "a", "\x85b", 2),
+            (1, "a\x85b", "</w>", 2),
+            (2, "x", "\u2028y", 1),
+            (3, "x\u2028y", "</w>", 1),
+        ]
+
+    def test_empty_corpus_gives_no_rows(self, spark):
+        docs = spark.createDataFrame([], "doc_id bigint, text string")
+        out = bpe.bpe_merge_table(spark, docs, 4)
+        assert out.collect() == []
+        assert out.schema.simpleString() == (
+            "struct<merge_idx:int,left:string,right:string,"
+            "pair_freq:bigint>"
+        )

@@ -1,6 +1,7 @@
 """Round-11 continuation pins: the two engine-side perf fixes.
 
-1. ``connected_components`` runs its propagation loop under a scoped
+1. ``connected_components`` above its one-task cap (forced here by
+   the ``cc_path`` fixture) runs its propagation loop under a scoped
    conf (AQE off + shuffle width sized to the measured node+edge
    count — 23.7 s -> ~10 s on the sf0.1 DBSCAN graph). The loop must
    leave the caller's conf untouched, produce labels identical to a
@@ -52,7 +53,9 @@ class TestLoopConf:
         # ...huge loops are memory-bound at ~1M rows/task
         assert loop_parts(spark, 2_000_000_000) == max(dp, 2000)
 
-    def test_labels_match_union_find_and_conf_survives(self, spark):
+    def test_labels_match_union_find_and_conf_survives(
+        self, spark, cc_path
+    ):
         spark.conf.set("spark.sql.shuffle.partitions", "7")
         # chain + star + two singleton-pair components, plus a cycle
         pairs = (
@@ -74,12 +77,13 @@ class TestLoopConf:
 class TestCCRandomGraphs:
     """Property check: on arbitrary random graphs (hypothesis-drawn
     edge lists with skewed id reuse so chains, stars and cycles all
-    occur), the loop-scoped connected_components must equal a
-    union-find ground truth exactly. Few examples — each run is a
-    full Spark iteration loop — but every seed exercises the scoped
-    conf, the broadcast hint and the rewrap path end to end."""
+    occur), connected_components must equal a union-find ground
+    truth exactly on both paths (the ``cc_path`` fixture). Few
+    examples — on the distributed path each run is a full Spark
+    iteration loop — but there every seed exercises the scoped conf
+    and the rewrap path end to end."""
 
-    def test_random_graphs_match_union_find(self, spark):
+    def test_random_graphs_match_union_find(self, spark, cc_path):
         import random
 
         for seed in (7, 23, 91):

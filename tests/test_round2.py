@@ -87,9 +87,14 @@ def test_scd2_multi_update_keeps_latest_per_key(spark):
     assert len(closed) == 1 and closed[0].valid_to is not None
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     # a 12-node chain has diameter 11; 2 min-label iterations cannot
-    # finish, and a silent partial answer would be wrong
+    # finish, and a silent partial answer would be wrong. Only the
+    # distributed loop has rounds to run out of: force it (every test
+    # graph is below the one-task cap)
+    from datafusion_archive_spark.operators import dedup as dd
+
+    monkeypatch.setattr(dd, "_BROADCAST_NODE_CAP", 0)
     chain = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(12)]
     )

@@ -25,7 +25,11 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a copy of the tree checks its
+# own package
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
 
 from datafusion_archive_spark.context import TESTDATA_TABLES
 from datafusion_archive_spark.session import get_spark
