@@ -32,8 +32,8 @@ from pyspark.sql import functions as F
 
 from datafusion_archive_spark.functions import text as TX
 from datafusion_archive_spark.functions.rounding import round_half_up
+from datafusion_archive_spark.operators import util as _util
 from datafusion_archive_spark.operators.util import (
-    BROADCAST_NODE_CAP as _BROADCAST_NODE_CAP,
     cached,
     loop_session as _loop_session,
     one_task,
@@ -579,19 +579,6 @@ def simhash_near_pairs(
     )
 
 
-#: label-chain compressions per propagation round. With label-pointer
-#: edges in the propagation set (hash-to-min), extra jumps buy nothing:
-#: the 240k round-11b probe converges in 29 rounds with 1 jump or 3,
-#: and each jump is a per-round self-join — so keep exactly one.
-_JUMPS_PER_ROUND = 1
-
-#: _BROADCAST_NODE_CAP is shared with graph.pagerank — see
-#: operators.util.BROADCAST_NODE_CAP for the sizing rationale
-#: (honest one-real-count hint vs Catalyst's carried checkpoint
-#: estimates; 2M rows x ~32 B ~= 64 MB broadcast). It also bounds the
-#: edge list connected_components labels in one task.
-
-
 def _cc_kernel(t):
     """util.one_task kernel: NumPy min-label union-find over the
     directed edge list, ids densified in sorted order (min label = min
@@ -649,18 +636,20 @@ def connected_components(
     matches into keep-one groups at scale.
 
     One real count of the de-duplicated directed edge list picks the
-    path. At most _BROADCAST_NODE_CAP edges (nodes <= edges): a lazy
-    util.one_task frame labels the whole graph (_cc_kernel), with no
-    round limit. Above it: min-label propagation, each iteration a
-    join + a min-aggregate, all shuffles on the node id.
+    path. At most 2 x util.GRAPH_ROW_CAP directed edges (the cap counts
+    undirected edges, as for graph.pagerank): a lazy util.one_task
+    frame labels the whole graph (_cc_kernel), with no round limit.
+    Above it: min-label propagation in a util.loop_session child
+    (AQE off, loop-sized shuffle width), each iteration a join + a
+    min-aggregate, all shuffles on the node id.
 
     Each node starts labeled with itself; every iteration each node
     takes the min label over its neighbors in the graph UNION the
     label-pointer mapping (both directions — the hash-to-min trick:
     mins flow member → label-root → members, so star-shaped regions
-    merge in O(1) rounds), then applies ``_JUMPS_PER_ROUND`` POINTER
-    JUMPS (``L(u) ← L(L(u))`` — self-joins on the label table) to
-    flatten label chains. Labels are min-monotone, so convergence is
+    merge in O(1) rounds), then applies one POINTER JUMP
+    (``L(u) ← L(L(u))`` — a self-join on the label table) to flatten
+    label chains. Labels are min-monotone, so convergence is
     guaranteed; thin chain-of-stars tails can still take ~diameter/k
     rounds, which the default cap absorbs (the round-11b 240k-point
     geometric probe — largest component 115 nodes, diameter 32 —
@@ -690,7 +679,7 @@ def connected_components(
         .distinct()
     )
     n_edges = edges.count()
-    if n_edges <= _BROADCAST_NODE_CAP:
+    if n_edges <= 2 * _util.GRAPH_ROW_CAP:
         typ = edges.schema["u"].dataType.simpleString()
         return cached(
             one_task(edges, _cc_kernel, f"node {typ}, component {typ}")
@@ -707,21 +696,19 @@ def connected_components(
     # the jump table, the changed-check side); `edges` itself can be
     # much larger and is never broadcast.
     n_nodes = labels.count()
-    small = n_nodes <= _BROADCAST_NODE_CAP
+    small = n_nodes <= _util.GRAPH_ROW_CAP
 
     def _bc(label_sized: DataFrame) -> DataFrame:
         return F.broadcast(label_sized) if small else label_sized
 
     changed = 0
-    # the loop runs on a dedicated child session (own SQLConf: AQE
-    # off, label-sized shuffle width) — the caller's session conf is
-    # never touched, so concurrent queries on it cannot plan under
-    # the narrowed width (VERDICT r13 #2; see operators.util.
-    # loop_session). edges/labels cross via global-temp-view handoff;
-    # their persisted data is shared (one cache manager per context).
+    # the loop runs on a child session (AQE off, label-sized shuffle
+    # width); the caller's session conf is never touched. edges/labels
+    # are rebound to the child with their cached data shared (one
+    # cache manager per context).
     with _loop_session(pairs.sparkSession, 2 * n_nodes + n_edges) as ls:
         edges_l = ls.handoff(edges)
-        labels_l = labels_first = ls.handoff(labels)
+        labels_l = ls.handoff(labels)
         for _ in range(max_iterations):
             # min over the ORIGINAL edges plus the LABEL-POINTER edges in
             # both directions. Plain propagation moves the min value one
@@ -762,23 +749,22 @@ def connected_components(
                 ).alias("component"),
                 F.col("component").alias("_old"),
             )
-            # pointer jumps: L(u) ← L(L(u)), repeated _JUMPS_PER_ROUND
-            # times — label-only self-joins that flatten label chains so
-            # the next round's label edges point near the root. Cheap
-            # next to the per-round edge join.
-            compressed = stepped
-            for _ in range(_JUMPS_PER_ROUND):
-                jump = compressed.select(
-                    F.col("node").alias("jnode"),
-                    F.col("component").alias("jcomp"),
-                )
-                compressed = compressed.join(
-                    _bc(jump), compressed.component == jump.jnode, "left"
-                ).select(
-                    "node",
-                    F.coalesce("jcomp", "component").alias("component"),
-                    "_old",
-                )
+            # one pointer jump: L(u) ← L(L(u)), a label-only self-join
+            # that flattens label chains so the next round's label edges
+            # point near the root. With the label-pointer edges above,
+            # more jumps buy nothing (the 240k round-11b probe converges
+            # in 29 rounds with 1 jump or 3), and each is a self-join.
+            jump = stepped.select(
+                F.col("node").alias("jnode"),
+                F.col("component").alias("jcomp"),
+            )
+            compressed = stepped.join(
+                _bc(jump), stepped.component == jump.jnode, "left"
+            ).select(
+                "node",
+                F.coalesce("jcomp", "component").alias("component"),
+                "_old",
+            )
             # localCheckpoint, not persist: persist caches *data* but the
             # logical plan still accrues one join per iteration — planning
             # cost (and plan-string size) grows without bound on
@@ -813,24 +799,13 @@ def connected_components(
             # convergence straight off the checkpoint job's metrics
             # (the _old column carried through the round)
             changed = obs.get["n_changed"]
-            new_labels = rewrapped.select("node", "component")
-            if labels_l is not labels_first:
-                labels_l.unpersist()
-            else:
-                # first iteration: labels_l is the child's VIEW-READ
-                # frame — whether unpersisting it reaches the caller's
-                # cache entry depends on the cache manager stripping
-                # the view's SubqueryAlias, which is version-dependent
-                # (ADVICE r14). Unpersist the ORIGINAL caller-side
-                # frame instead; nothing reads it after this round
-                # (later rounds propagate over new_labels only).
-                labels.unpersist()
-            labels_l = new_labels
+            labels_l.unpersist()
+            labels_l = rewrapped.select("node", "component")
             if changed == 0:
                 break
         # hand the (materialized — rewrapped checkpoint) result back
-        # to the caller's session before the scope drops its views;
-        # downstream consumers then execute under the caller's conf
+        # to the caller's session; downstream consumers then execute
+        # under the caller's conf
         result = ls.handback(labels_l)
     edges.unpersist()
     labels.unpersist()

@@ -14,9 +14,9 @@ surface at all (``/root/reference/ROADMAP.md`` stops at scalar
 queries); these follow the classic MapReduce formulations
 (compact-forward triangle counting; power-iteration PageRank).
 
-The one exception is PageRank on a graph at or below the edge cap
-(_BROADCAST_EDGE_CAP): its whole power iteration runs as one
-mapInArrow task over the edge list. Above the cap it is the
+The one exception is PageRank on a graph of at most
+util.GRAPH_ROW_CAP undirected edges: its whole power iteration runs
+as one mapInArrow task over the edge list. Above the cap it is the
 distributed join + aggregate loop.
 """
 
@@ -25,27 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_archive_spark.operators import util as _util
 from datafusion_archive_spark.operators.util import (
-    BROADCAST_NODE_CAP,
     cached,
     loop_parts,
     loop_session,
     one_task,
 )
 
-#: broadcast the ADJACENCY table (node-keyed, edge-sized payload: one
-#: long per oriented edge inside sort_array'd lists) into the two
-#: attach joins when the edge count is provably at most this many
-#: rows. Honest sizing (ADVICE r15): 2M edges ≈ 16 MB of raw longs,
-#: but the broadcast HashedRelation also pays per-row array/struct
-#: headers and the node keys (~3-4x raw ⇒ ~50-70 MB built), and the
-#: relation is broadcast TWICE (once per attach side) — still inside
-#: the executor broadcast budget with the 8g session, which is what
-#: the cap is calibrated against. A web-scale graph exceeds the cap
-#: and both attach joins shuffle on the node id instead. pagerank uses
-#: the same cap to choose its one-task path (at most 4M directed
-#: edges, two longs each, in one Python worker).
-_BROADCAST_EDGE_CAP = 2_000_000
 
 def _materialize(fn):
     """Run an eager graph materialization (count / localCheckpoint),
@@ -127,15 +114,16 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     Round 15 (guide §3.1, measured on the sf0.1 co-purchase graph):
     the two rank-attach joins planned as SortMergeJoin, shuffling the
     full edge list to attach node-sized degree ranks; they broadcast
-    under the honest BROADCAST_NODE_CAP count (same discipline as
+    under the honest util.GRAPH_ROW_CAP count (same discipline as
     pagerank), falling back to the shuffled plan past the cap.
     Triangles are counted by ADJACENCY INTERSECTION, not wedge
     enumeration: per oriented edge (u, v),
     ``size(array_intersect(N⁺(u), N⁺(v)))`` summed — no wedge row
     ever exists (see the inline comment at the adjacency build). The
-    two adjacency-attach joins broadcast under the separate
-    edge-count cap (_BROADCAST_EDGE_CAP — the adjacency table is
-    node-keyed but edge-sized) and shuffle on the node id past it."""
+    two adjacency-attach joins broadcast under the same cap checked
+    against the edge count (the adjacency table is node-keyed but
+    edge-sized, and is broadcast twice) and shuffle on the node id
+    past it."""
     edges = cached(edges)
     deg = cached(degrees(edges))
     n_nodes = _materialize(deg.count)
@@ -144,7 +132,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # both fit 31 bits for any realistic catalog)
     rank = (F.col("deg") * F.lit(1 << 32) + F.col("node")).alias("rank")
     dr = deg.select("node", rank)
-    small_nodes = n_nodes <= BROADCAST_NODE_CAP
+    small_nodes = n_nodes <= _util.GRAPH_ROW_CAP
 
     def _bc_nodes(node_sized):
         return F.broadcast(node_sized) if small_nodes else node_sized
@@ -195,7 +183,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     def _bc_adj(adj_sized):
         return (
             F.broadcast(adj_sized)
-            if n_edge_rows <= _BROADCAST_EDGE_CAP
+            if n_edge_rows <= _util.GRAPH_ROW_CAP
             else adj_sized
         )
 
@@ -290,17 +278,18 @@ def pagerank(
 
     The path is chosen by one real count of the directed edge list:
 
-    - at most _BROADCAST_EDGE_CAP undirected edges (the cap
-      triangle_stats uses for its edge-sized broadcast): a lazy
+    - at most 2 x util.GRAPH_ROW_CAP directed edges (the cap counts
+      undirected edges, as for dedup.connected_components): a lazy
       util.one_task frame runs the whole power iteration (one NumPy
       bincount per iteration); a graph this size is a few tens of MB
       of Arrow in one worker.
     - above it: each iteration is one join of the rank vector against
       the directed edge list plus one aggregate, both keyed on node
-      id. The loop runs on a dedicated child session (AQE off, width
-      from the measured graph — see operators.util.loop_session), so
-      the caller's session conf is never narrowed (VERDICT r13 #2);
-      localCheckpoint per iteration truncates lineage (same
+      id. The loop runs in a util.loop_session child (AQE off, width
+      from the measured graph), so the caller's session conf is never
+      narrowed; the contribution table is cached pre-partitioned by
+      dst at that width, so the per-iteration aggregate plans no
+      Exchange; localCheckpoint per iteration truncates lineage (same
       discipline as dedup.connected_components); the only
       driver-side values are the scalar counts and the iteration
       count."""
@@ -320,7 +309,7 @@ def pagerank(
     # materializes the cache under the CALLER's conf
     n_directed = _materialize(directed.count)
     # the cap counts undirected edges; the directed list holds each twice
-    if n_directed <= 2 * _BROADCAST_EDGE_CAP:
+    if n_directed <= 2 * _util.GRAPH_ROW_CAP:
         node_type = directed.schema["src"].dataType.simpleString()
         return one_task(
             directed,
@@ -352,7 +341,7 @@ def pagerank(
     out = cached(
         directed.join(
             F.broadcast(_deg_src)
-            if n <= BROADCAST_NODE_CAP
+            if n <= _util.GRAPH_ROW_CAP
             else _deg_src,
             "src",
         )
@@ -380,7 +369,7 @@ def pagerank(
     # one real count, not Catalyst's carried checkpoint estimates);
     # a web-scale graph exceeds the cap and shuffles both sides on
     # the node id unchanged
-    small = n <= BROADCAST_NODE_CAP
+    small = n <= _util.GRAPH_ROW_CAP
 
     def _bc(rank_sized):
         return F.broadcast(rank_sized) if small else rank_sized

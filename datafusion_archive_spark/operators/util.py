@@ -2,12 +2,9 @@
 
 from __future__ import annotations
 
-import itertools
 import os
 import re
-import threading
 import warnings
-import weakref
 
 from pyspark.sql import DataFrame
 
@@ -169,29 +166,32 @@ LOOP_MIN_ROWS_PER_TASK = 50_000
 
 
 def loop_parts(spark, n_rows: int) -> int:
-    """The shuffle width an iterative loop scope uses for ``n_rows``
-    per-iteration rows — THE public coupling point (ADVICE r15):
-    ``graph.pagerank`` pre-partitions its cached contribution table by
-    dst at exactly this width so the per-iteration aggregate's
-    required distribution is already satisfied and its Exchange is
-    elided; ``loop_session`` derives its child session's
-    ``spark.sql.shuffle.partitions`` from the same function. If the
-    two ever computed different counts, the layout would silently stop
-    matching and the per-iteration shuffle would return — deriving
-    both from one helper makes the agreement structural
-    (tests/test_round16.py pins it)."""
+    """The shuffle width of a :class:`loop_session` child for ``n_rows``
+    per-iteration rows. ``graph.pagerank`` also pre-partitions its
+    cached contribution table by dst at exactly this width, so the
+    per-iteration aggregate on the child finds its distribution
+    already satisfied and plans no Exchange; both sides derive the
+    width from this one function so they cannot drift apart
+    (tests/test_round16.py, tests/test_loop_scope.py)."""
     lo = max(1, -(-n_rows // LOOP_ROWS_PER_PARTITION))
     hi = max(1, -(-n_rows // LOOP_MIN_ROWS_PER_TASK))
     dp = spark.sparkContext.defaultParallelism
     return min(max(dp, lo), hi)
 
-#: broadcast a label/rank-sized frame into per-iteration joins when
-#: the node set is provably at most this many rows (one real count,
-#: not Catalyst's carried checkpoint estimates). 2M rows x ~32 B
-#: is ~64 MB — inside the executor broadcast budget; a web-scale
-#: graph exceeds the cap and shuffles both sides on the node id.
-#: Shared by dedup.connected_components and graph.pagerank.
-BROADCAST_NODE_CAP = 2_000_000
+
+#: the one size bound of the graph operators (dedup.connected_components
+#: and graph.pagerank / triangle_stats), checked against one real count,
+#: never Catalyst's carried checkpoint estimates:
+#:
+#: - a node- or edge-sized frame of at most this many rows is broadcast
+#:   into joins (2M rows x ~32 B is ~64 MB, or ~50-70 MB built for the
+#:   triangle adjacency table, inside the executor broadcast budget of
+#:   the 8g session); past it both sides shuffle on the node id;
+#: - a graph of at most this many undirected edges (2x as many directed
+#:   edges, two longs each) runs its whole loop in one Python worker
+#:   through :func:`one_task`; past it the loop runs as Spark jobs in a
+#:   :class:`loop_session`.
+GRAPH_ROW_CAP = 2_000_000
 
 
 def one_task(df: DataFrame, kernel, schema: str) -> DataFrame:
@@ -277,104 +277,49 @@ def salt_count(spark, n_groups: int) -> int:
     return min(max(salts, SALT_MIN), SALT_MAX)
 
 
-#: Monotonic suffix for loop_session's global-temp-view handoff names
-#: (process-unique together with the thread id — two concurrent loops
-#: can never collide).
-_HANDOFF_SEQ = itertools.count()
-
-#: Idle child sessions awaiting reuse, keyed by id(parent session)
-#: (VERDICT r14 #2: every loop_session used to mint a fresh
-#: ``newSession()`` and release it to the GC on exit, so a driver
-#: running thousands of iterative loops accumulated an unbounded
-#: number of not-yet-collected JVM SessionStates). A scope now POPS
-#: an idle child (or creates one if none is idle — concurrent loops
-#: therefore still get DISTINCT children and never share a narrowed
-#: conf), and returns it on exit if the idle pool is below
-#: _CHILD_POOL_MAX; steady-state sequential loops reuse one child per
-#: parent. Keyed by id() with a weakref.finalize on the parent: the
-#: pool entry dies with the parent session, so a recycled id() never
-#: inherits another session's children. Reuse is conf-safe because
-#: __enter__ re-syncs the child's SQLConf to the caller's effective
-#: confs (diff-based: only changed keys touch py4j) before
-#: re-narrowing.
-_CHILD_POOL_LOCK = threading.RLock()
-_CHILD_POOL: dict[int, list] = {}
-_CHILD_POOL_MAX = 2
-
-
-def _prune_child_pool(key: int) -> None:
-    with _CHILD_POOL_LOCK:
-        _CHILD_POOL.pop(key, None)
-
-
-def _child_pool_for(spark) -> list:
-    """The parent's idle-child list, creating (and finalize-keying)
-    it on first use. Callers must hold _CHILD_POOL_LOCK."""
-    key = id(spark)
-    pool = _CHILD_POOL.get(key)
-    if pool is None:
-        pool = _CHILD_POOL[key] = []
-        try:
-            weakref.finalize(spark, _prune_child_pool, key)
-        except TypeError:  # pragma: no cover - non-weakrefable stub
-            pass
-    return pool
+def _rebind(df: DataFrame, spark) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``spark``. No view and no
+    data movement: a persisted input still hits the shared cache
+    manager (lookup is by canonicalized plan) and keeps the
+    partitioning it was cached with."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, spark)
 
 
 class loop_session:
-    """The scope every iterative Spark-job loop (connected-components
-    propagation, PageRank power iteration above the edge cap) runs in.
+    """The scope the above-cap iterative loops (connected-components
+    propagation, PageRank power iteration) run in: a fresh
+    ``spark.newSession()`` child with AQE off and the
+    :func:`loop_parts` shuffle width for ``n_rows`` per-iteration rows.
 
     AQE re-plans and materializes every tiny per-round query stage,
-    and the session's shuffle width is sized for fact scans, not the
-    loop's label/edge-sized shuffles — so a loop runs with AQE off and
-    the :func:`loop_parts` width derived from one real count of its
-    per-iteration rows. Those confs are never set on the CALLER's
-    session: the loop runs on a dedicated ``spark.newSession()`` child
-    (own SQLConf; shared SparkContext, shared cache manager, shared
-    global-temp-view catalog), so the narrowed width/AQE-off are
-    invisible to every other thread by construction (VERDICT r13 #2),
-    concurrent and nested loops are independent, and there is nothing
-    to restore on exit. If the child cannot be created, the scope
-    raises; it never narrows the caller's conf instead.
+    and the caller's shuffle width is sized for fact scans, not the
+    loop's label/edge-sized shuffles. The child has its own SQLConf
+    (and shares the SparkContext and the cache manager), so the
+    caller's conf is never narrowed, and concurrent or nested loops
+    each get their own child. If the child cannot be created, the
+    scope raises.
 
-    Handoff protocol (DataFrames are session-bound, so the loop's
-    inputs must cross explicitly):
-
-    - ``handoff(df)`` — publish a caller-session frame through a
-      uniquely-named global temp view and return the CHILD-bound
-      frame that reads it. The view stores the analyzed plan, so a
-      persisted input still hits the shared cache manager (lookup is
-      by canonicalized plan) and no data moves.
-    - ``handback(df)`` — the inverse: return a CALLER-bound frame for
-      the loop's (already materialized — localCheckpoint/rewrapped)
-      result, so downstream consumers execute under the caller's
-      conf.
-
-    All handoff views are dropped on exit (success or error). The
-    child session itself has no close/stop API short of stopping the
-    shared SparkContext; since round 15 it is returned to a small
-    per-parent idle pool and REUSED by the next loop (its SQLConf is
-    re-synced diff-based on re-entry), so a driver running thousands
-    of loops holds a bounded number of JVM SessionStates instead of
-    one per loop. Children beyond the pool cap are released to the
-    GC as before — they hold a SessionState and nothing else once
-    the views are gone.
-
-    The child inherits the caller's EFFECTIVE SQL confs, not just the
-    context conf: ``newSession()`` starts from the SparkContext conf,
-    which misses confs set at runtime on an already-running context
+    The child starts from the caller's EFFECTIVE SQL confs, not just
+    the context conf: ``newSession()`` misses confs set at runtime
     (``spark.sql.session.timeZone``, the events table's
-    ``nanosAsLong``, ANSI/rebase modes, ...). Those are cloned from
-    ``spark.conf.getAll`` before narrowing, so if a cached handoff
-    block is evicted mid-loop and the child recomputes the upstream
-    scan, it executes under the caller's semantics, not Spark
-    defaults.
+    ``nanosAsLong``, ANSI/rebase modes, ...), so they are copied from
+    ``spark.conf.getAll`` before the narrowing. A cached input evicted
+    mid-loop is then recomputed under the caller's semantics.
+
+    DataFrames are session-bound: ``handoff(df)`` rebinds a caller
+    frame to the child, ``handback(df)`` rebinds a child frame (already
+    materialized: localCheckpoint / rewrapped RDD) to the caller, so
+    downstream consumers execute under the caller's conf. Exiting the
+    scope releases nothing; the child goes to the GC with its last
+    frame.
     """
 
     #: the confs whose divergence between caller and child changes
     #: SCAN/EXPR semantics (not just performance) on a mid-loop
-    #: recomputation: a clone of one of these that the child refuses
+    #: recomputation: a copy of one of these that the child refuses
     #: warns, while other refusals (static entries) stay silent
     _SEMANTIC_CONF_KEYS = (
         "spark.sql.session.timeZone",
@@ -388,45 +333,14 @@ class loop_session:
     def __init__(self, spark, n_rows: int):
         self._spark = spark
         self._n_rows = n_rows
-        self._child = None
-        self._views: list[str] = []
-        self._gt_db = "global_temp"
-        self._state = "new"  # new -> entered -> exited
 
     def __enter__(self):
-        with _CHILD_POOL_LOCK:
-            pool = _child_pool_for(self._spark)
-            child = pool.pop() if pool else None
-        reused = child is not None
-        if not reused:
-            child = self._spark.newSession()
-        # sync the child's SQLConf to the caller's effective (runtime-
-        # set) confs — see the class docstring. On a pooled child this
-        # is a DIFF: only keys whose values changed since the last loop
-        # touch py4j, and keys a previous scope set that the caller no
-        # longer carries are unset, so reuse cannot leak conf across
-        # loops.
-        confs = dict(self._spark.conf.getAll)
-        current = {}
-        if reused:
-            current = dict(child.conf.getAll)
-            for key in current:
-                if key not in confs:
-                    try:
-                        child.conf.unset(key)
-                    except Exception:
-                        pass
-        for key, val in confs.items():
-            if reused and current.get(key) == val:
-                continue
+        child = self._spark.newSession()
+        for key, val in self._spark.conf.getAll.items():
             try:
                 child.conf.set(key, val)
             except Exception:
-                # static / non-modifiable entries (spark.app.name)
-                # legitimately refuse; a SEMANTIC key refusing means a
-                # mid-loop cache-eviction recompute would run under
-                # Spark-default scan/expr semantics — loud, not silent
-                # (VERDICT r14 #4)
+                # static entries (spark.app.name) legitimately refuse
                 if key in self._SEMANTIC_CONF_KEYS:
                     warnings.warn(
                         f"loop_session: failed to clone semantic "
@@ -437,81 +351,21 @@ class loop_session:
                         RuntimeWarning,
                         stacklevel=2,
                     )
-        # derive the loop width from the shared public helper (one
-        # real count of the round-invariant per-iteration rows,
-        # clamped to the per-task row band) — AFTER the sync, so the
-        # narrowing wins over any cloned width
-        parts = loop_parts(self._spark, self._n_rows)
         child.conf.set("spark.sql.adaptive.enabled", "false")
-        child.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            self._gt_db = child.conf.get(
-                "spark.sql.globalTempDatabase", "global_temp"
-            )
-        except Exception:
-            self._gt_db = "global_temp"
-        self._child = child
-        self._state = "entered"
-        return self
-
-    @property
-    def session(self):
-        """The session loop-internal code should build frames on."""
-        return self._child if self._child is not None else self._spark
-
-    def _check_entered(self, op: str) -> None:
-        # a handoff outside the scope would silently return a frame
-        # whose views are (or will be) dropped — fail loudly instead
-        if self._state != "entered":
-            raise RuntimeError(
-                f"loop_session.{op}() outside the with-scope "
-                f"(state={self._state}): handoff views live only "
-                "while the scope is entered"
-            )
-
-    def _publish(self, df: DataFrame) -> str:
-        name = (
-            f"_loop_handoff_{os.getpid()}_"
-            f"{threading.get_ident()}_{next(_HANDOFF_SEQ)}"
+        child.conf.set(
+            "spark.sql.shuffle.partitions",
+            str(loop_parts(self._spark, self._n_rows)),
         )
-        df.createOrReplaceGlobalTempView(name)
-        self._views.append(name)
-        return name
+        self.session = child
+        return self
 
     def handoff(self, df: DataFrame) -> DataFrame:
         """Caller-session frame -> child-bound frame."""
-        self._check_entered("handoff")
-        return self._child.table(f"{self._gt_db}.{self._publish(df)}")
+        return _rebind(df, self.session)
 
     def handback(self, df: DataFrame) -> DataFrame:
-        """Child-bound frame -> caller-session frame. The frame should
-        already be materialized (localCheckpoint / rewrapped RDD): the
-        caller's first action on it then just reads the materialized
-        partitions under the caller's own conf."""
-        self._check_entered("handback")
-        return self._spark.table(f"{self._gt_db}.{self._publish(df)}")
+        """Child-bound frame -> caller-session frame."""
+        return _rebind(df, self._spark)
 
     def __exit__(self, *exc):
-        if self._state != "entered":  # idempotent / never-entered
-            return False
-        self._state = "exited"
-        # dropping by name is safe even if an entry was never created
-        # (drop returns False) — and the handed-back frames keep
-        # working: table() analyzed the view eagerly, so the plan no
-        # longer references the name
-        for name in self._views:
-            try:
-                self._spark.catalog.dropGlobalTempView(name)
-            except Exception:
-                pass
-        self._views.clear()
-        # return the child to the parent's idle pool (bounded) so the
-        # next sequential loop reuses it instead of minting another
-        # JVM SessionState (VERDICT r14 #2); beyond the cap, release
-        # to the GC as before
-        child, self._child = self._child, None
-        with _CHILD_POOL_LOCK:
-            pool = _child_pool_for(self._spark)
-            if len(pool) < _CHILD_POOL_MAX:
-                pool.append(child)
         return False

@@ -83,11 +83,11 @@ def jobs_of(spark):
 def cc_path(request, monkeypatch):
     """Runs a connected-components test on both paths: ``one_task`` as
     shipped (every test graph is below the cap), ``distributed`` with
-    ``dedup._BROADCAST_NODE_CAP`` forced below any edge count so the
+    ``util.GRAPH_ROW_CAP`` forced below any edge count so the
     propagation loop runs (-1, not 0: an empty edge list is at a cap
     of 0)."""
     if request.param == "distributed":
-        from datafusion_archive_spark.operators import dedup
+        from datafusion_archive_spark.operators import util
 
-        monkeypatch.setattr(dedup, "_BROADCAST_NODE_CAP", -1)
+        monkeypatch.setattr(util, "GRAPH_ROW_CAP", -1)
     return request.param

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_archive_spark.operators import graph as G
+from datafusion_archive_spark.operators import util as op_util
 from datafusion_archive_spark.operators.util import release_caches
 from datafusion_archive_spark.plans import summarize
 from datafusion_archive_spark.queries import pipeline9 as P9
@@ -77,7 +78,7 @@ class TestPageRank:
         distributed loop is forced by a zero edge cap, since no test
         graph is large enough to reach it."""
         if path == "distributed":
-            monkeypatch.setattr(G, "_BROADCAST_EDGE_CAP", 0)
+            monkeypatch.setattr(op_util, "GRAPH_ROW_CAP", 0)
         edges = _python_graph(spark)
         adj = defaultdict(set)
         for a, b in edges:

@@ -1,9 +1,16 @@
-"""The iterative-loop scope: ``operators.util.loop_session`` is the one
-loop scope, and the engine runs on classic (py4j) sessions only.
+"""The iterative-loop scope: ``operators.util.loop_session`` runs each
+above-cap loop on a plain per-loop child session, and the engine runs
+on classic (py4j) sessions only.
 
-- The job count of a connected-components call is pinned, for a fresh
-  and for a pooled child session alike: the loop runs with AQE off on
-  the child, so the count is deterministic.
+- The child is narrowed (AQE off, ``loop_parts`` width); the caller's
+  conf never is. Concurrent and nested scopes each get their own child.
+- The child starts from the caller's runtime confs; a semantic conf it
+  refuses warns, a static one does not.
+- ``handoff``/``handback`` rebind a frame's analyzed plan to the other
+  session: a cached input keeps its cache hit and its partitioning.
+- Scopes leave nothing behind: no listener, no module-level registry.
+- The job count of a connected-components call is pinned: the loop
+  runs with AQE off on the child, so the count is deterministic.
 - ``get_spark`` rejects a session without a JVM context (Spark
   Connect) before touching it.
 - A child session that cannot be created is an error, not a degraded
@@ -12,13 +19,17 @@ loop scope, and the engine runs on classic (py4j) sessions only.
 
 from __future__ import annotations
 
+import gc
+import threading
 import warnings
+import weakref
 
 import pytest
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
-from datafusion_archive_spark.operators import dedup
-from datafusion_archive_spark.operators.util import loop_session
+from datafusion_archive_spark.operators import dedup, util
+from datafusion_archive_spark.operators.util import loop_parts, loop_session
 
 #: jobs one ``connected_components`` call runs on the graph below
 #: with the one-task cap forced to 0: the edge and node counts under
@@ -39,12 +50,19 @@ def _pairs():
     )
 
 
+def _narrowable(spark):
+    return (
+        spark.conf.get("spark.sql.shuffle.partitions"),
+        spark.conf.get("spark.sql.adaptive.enabled"),
+    )
+
+
 def test_connected_components_job_count_pinned(spark, jobs_of, monkeypatch):
-    """Two calls in one session — the second runs on the pooled child
-    the first returned — each run exactly CC_JOBS jobs and give the
-    same labels. The cap is forced to 0: the child session serves
-    only the distributed path, which no test graph reaches."""
-    monkeypatch.setattr(dedup, "_BROADCAST_NODE_CAP", 0)
+    """Two calls in one session, each on its own child, run exactly
+    CC_JOBS jobs and give the same labels. The cap is forced to 0: the
+    child session serves only the distributed path, which no test
+    graph reaches."""
+    monkeypatch.setattr(util, "GRAPH_ROW_CAP", 0)
     pdf = spark.createDataFrame(_pairs(), "id_a long, id_b long")
     counts, labels = [], []
     for _ in range(2):
@@ -54,6 +72,222 @@ def test_connected_components_job_count_pinned(spark, jobs_of, monkeypatch):
     assert counts == [CC_JOBS, CC_JOBS]
     assert labels[0] == labels[1]
     assert len(labels[0]) == 12 + 10 + 4 + 3
+
+
+def test_loop_session_parent_conf_never_narrowed(spark):
+    """Mid-scope, the CALLER's session conf is identical to its
+    pre-scope state (only the child reads the narrowed width with AQE
+    off), so a frame built before the loop and collected during it
+    plans exactly as it would with no loop running."""
+    before = _narrowable(spark)
+    with loop_session(spark, 1000) as ls:
+        assert ls.session is not spark
+        assert _narrowable(spark) == before
+        # the child IS narrowed
+        assert _narrowable(ls.session) == ("1", "false")
+    assert _narrowable(spark) == before
+
+
+def test_loop_session_handoff_handback_roundtrip(spark):
+    df = spark.range(100).withColumn("g", F.col("id") % 3)
+    with loop_session(spark, 100) as ls:
+        child_df = ls.handoff(df)
+        assert child_df.sparkSession is ls.session
+        agg = (
+            child_df.groupBy("g")
+            .agg(F.sum("id").alias("s"))
+            .localCheckpoint(eager=True)
+        )
+        back = ls.handback(agg)
+    assert back.sparkSession is spark
+    # the handed-back frame still reads after the scope, and values
+    # match a parent-session computation exactly
+    assert sorted((r.g, r.s) for r in back.collect()) == sorted(
+        (r.g, r.s)
+        for r in df.groupBy("g").agg(F.sum("id").alias("s")).collect()
+    )
+
+
+def test_handoff_keeps_cache_and_layout(spark):
+    """A cached frame laid out by key at the loop width keeps both
+    across the handoff: on the child, a groupBy on that key reads the
+    cache and plans no Exchange above it. PageRank's above-cap loop
+    relies on this to aggregate its contribution table without a
+    per-iteration shuffle."""
+    n = 100_000
+    laid_out = (
+        spark.range(n)
+        .select((F.col("id") % 97).alias("dst"), F.col("id").alias("v"))
+        .repartition(loop_parts(spark, n), "dst")
+        .persist()
+    )
+    try:
+        laid_out.count()
+        with loop_session(spark, n) as ls:
+            agg = ls.handoff(laid_out).groupBy("dst").agg(F.sum("v"))
+            plan = agg._jdf.queryExecution().executedPlan().toString()
+            assert agg.count() == 97
+        above_cache, cache, _ = plan.partition("InMemoryTableScan")
+        assert cache, plan
+        assert "Exchange" not in above_cache, plan
+    finally:
+        laid_out.unpersist()
+
+
+def test_loop_session_concurrent_scopes_do_not_serialize(spark):
+    """Two threads' loops enter simultaneously — a shared barrier
+    inside both scopes releases only if neither blocks the other —
+    and run on distinct children, so their narrowed widths cannot
+    collide."""
+    barrier = threading.Barrier(2, timeout=30)
+    seen, errs = [], []
+
+    def run():
+        try:
+            with loop_session(spark, 1000) as ls:
+                seen.append(ls.session)
+                barrier.wait()
+        except Exception as exc:  # pragma: no cover - failure detail
+            errs.append(exc)
+
+    ts = [threading.Thread(target=run) for _ in range(2)]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join(60)
+    assert errs == []
+    assert len(seen) == 2 and seen[0] is not seen[1]
+
+
+def test_loop_session_nested_scopes_same_thread(spark):
+    """Nested loops on one thread run on separate child sessions:
+    they are independent and both compute correctly."""
+    df = spark.range(50).withColumn("g", F.col("id") % 5)
+    with loop_session(spark, 50) as outer:
+        o = outer.handoff(df)
+        with loop_session(spark, 50) as inner:
+            assert inner.session is not outer.session
+            i = inner.handoff(df)
+            n_inner = i.groupBy("g").count().count()
+        assert n_inner == 5
+        assert o.groupBy("g").count().count() == 5
+
+
+def test_sequential_scopes_leave_nothing_behind(spark):
+    """50 sequential scopes: the shared listener bus holds as many
+    listeners as before, and once the scopes' frames are gone no
+    child session is still referenced from Python (``util`` keeps no
+    module-level registry of them)."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    before = bus.listeners().size()
+    children = []
+    df = spark.range(10)
+    for _ in range(50):
+        with loop_session(spark, 1000) as ls:
+            ls.handoff(df)
+            children.append(weakref.ref(ls.session))
+    del ls
+    gc.collect()
+    # the newest child is exempt: pyspark's SparkSession constructor
+    # rebinds RDD.toDF to a closure over the session it builds
+    assert [c for c in children[:-1] if c() is not None] == []
+    assert bus.listeners().size() == before
+
+
+def test_loop_session_child_inherits_runtime_confs(spark):
+    """newSession() starts from the CONTEXT conf, which misses confs
+    set at runtime on an already-running context — so if a cached
+    handoff block were evicted mid-loop, the child would recompute
+    the upstream scan under Spark defaults (wrong timezone, the
+    events table's nanosAsLong unset). loop_session must clone the
+    caller's effective confs into the child."""
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    try:
+        bare_child = spark.newSession()
+        # preconditions: the raw child genuinely lacks them (if Spark
+        # ever starts inheriting, this test can be retired)
+        assert (
+            bare_child.conf.get("spark.sql.session.timeZone")
+            != "America/New_York"
+            or bare_child.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+            != "true"
+        )
+        with loop_session(spark, 1000) as ls:
+            child = ls.session
+            assert (
+                child.conf.get("spark.sql.session.timeZone")
+                == "America/New_York"
+            )
+            assert (
+                child.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+                == "true"
+            )
+            # and the narrowing still wins over the cloned width
+            assert child.conf.get("spark.sql.adaptive.enabled") == "false"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+
+
+def test_semantic_conf_clone_failure_warns(spark):
+    """A child that refuses to accept a _SEMANTIC_CONF_KEYS entry
+    (timezone here) must raise a RuntimeWarning naming the key —
+    a silent skip would let a mid-loop cache-eviction recompute run
+    under Spark-default scan semantics."""
+
+    poisoned = "spark.sql.session.timeZone"
+
+    class _PoisonConf:
+        def __init__(self, real):
+            self._real = real
+
+        def set(self, key, value):
+            if key == poisoned:
+                raise RuntimeError("poisoned")
+            return self._real.set(key, value)
+
+        def __getattr__(self, name):
+            return getattr(self._real, name)
+
+    class _PoisonChild:
+        def __init__(self, real):
+            self._real = real
+            self.conf = _PoisonConf(real.conf)
+
+        def __getattr__(self, name):
+            return getattr(self._real, name)
+
+    class _Parent:
+        def __init__(self, real):
+            self._real = real
+
+        def newSession(self):
+            return _PoisonChild(self._real.newSession())
+
+        def __getattr__(self, name):
+            return getattr(self._real, name)
+
+    # ensure the poisoned key is actually in the caller's effective
+    # confs so the clone attempts it
+    spark.conf.set(poisoned, spark.conf.get(poisoned))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with loop_session(_Parent(spark), 1000) as ls:
+            assert isinstance(ls.session, _PoisonChild)  # still a child
+    msgs = [str(w.message) for w in caught if w.category is RuntimeWarning]
+    assert any(poisoned in m and "semantic" in m for m in msgs), msgs
+
+
+def test_nonsemantic_conf_clone_failure_stays_silent(spark):
+    """Static / non-modifiable entries (spark.app.name et al) refuse
+    cloning on every session — those skips must stay silent or every
+    loop would warn."""
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        with loop_session(spark, 1000) as ls:
+            assert ls.session is not spark
+    assert not [w for w in caught if w.category is RuntimeWarning]
 
 
 class _NoJvmSession:
@@ -77,18 +311,9 @@ def test_get_spark_rejects_session_without_jvm(monkeypatch):
         get_spark("no-jvm")
 
 
-def _handoff_views(spark):
-    return [
-        t.name
-        for t in spark.catalog.listTables("global_temp")
-        if t.name.startswith("_loop_handoff_")
-    ]
-
-
 def test_loop_session_child_failure_propagates(spark):
     """A parent whose newSession() raises: the scope raises that
-    error, warns nothing, narrows nothing on the parent and leaves no
-    handoff view behind."""
+    error, warns nothing and narrows nothing on the parent."""
 
     class _NoChild:
         def __init__(self, real):
@@ -100,18 +325,11 @@ def test_loop_session_child_failure_propagates(spark):
         def __getattr__(self, name):
             return getattr(self._real, name)
 
-    before = (
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
-    )
+    before = _narrowable(spark)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         with pytest.raises(RuntimeError, match="no child sessions"):
             with loop_session(_NoChild(spark), 1000) as ls:
                 ls.handoff(spark.range(3))  # pragma: no cover
     assert [w for w in caught if w.category is RuntimeWarning] == []
-    assert (
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
-    ) == before
-    assert _handoff_views(spark) == []
+    assert _narrowable(spark) == before

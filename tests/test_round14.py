@@ -236,148 +236,6 @@ def test_salt_count_shuffle_partitions_signal():
 
 
 # ---------------------------------------------------------------- #
-# VERDICT r13 #2: loop_session — child-session loop isolation       #
-# ---------------------------------------------------------------- #
-
-
-def _views(spark):
-    # only loop_session's handoff views: the shared global_temp
-    # catalog legitimately holds other tests' views in a full run
-    return [
-        t.name
-        for t in spark.catalog.listTables("global_temp")
-        if t.name.startswith("_loop_handoff_")
-    ]
-
-
-def test_loop_session_parent_conf_never_narrowed(spark):
-    """The structural TOCTOU fix: mid-scope, the CALLER's session conf
-    is byte-identical to its pre-scope state (only the child reads
-    the narrowed width with AQE off), so a frame built before the
-    loop and collected during it plans exactly as it would with no
-    loop running."""
-    from datafusion_archive_spark.operators.util import loop_session
-
-    before = (
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
-    )
-    with loop_session(spark, 1000) as ls:
-        assert ls._child is not None
-        assert (
-            spark.conf.get("spark.sql.shuffle.partitions"),
-            spark.conf.get("spark.sql.adaptive.enabled"),
-        ) == before
-        # the child IS narrowed
-        assert ls._child.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert ls._child.conf.get("spark.sql.shuffle.partitions") == "1"
-    assert (
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
-    ) == before
-
-
-def test_loop_session_handoff_handback_roundtrip(spark):
-    from pyspark.sql import functions as F
-
-    from datafusion_archive_spark.operators.util import loop_session
-
-    df = spark.range(100).withColumn("g", F.col("id") % 3)
-    with loop_session(spark, 100) as ls:
-        child_df = ls.handoff(df)
-        assert child_df.sparkSession is ls._child
-        agg = (
-            child_df.groupBy("g")
-            .agg(F.sum("id").alias("s"))
-            .localCheckpoint(eager=True)
-        )
-        back = ls.handback(agg)
-    assert back.sparkSession is spark
-    # views are gone, the handed-back frame still reads (analysis was
-    # eager), and values match a parent-session computation exactly
-    assert sorted((r.g, r.s) for r in back.collect()) == sorted(
-        (r.g, r.s)
-        for r in df.groupBy("g").agg(F.sum("id").alias("s")).collect()
-    )
-
-
-def test_loop_session_drops_views_on_exit_and_error(spark):
-    from datafusion_archive_spark.operators.util import loop_session
-
-    df = spark.range(10)
-    with loop_session(spark, 10) as ls:
-        ls.handoff(df)
-        assert len(_views(spark)) >= 1
-    assert _views(spark) == []
-    with pytest.raises(RuntimeError, match="boom"):
-        with loop_session(spark, 10) as ls:
-            ls.handoff(df)
-            raise RuntimeError("boom")
-    assert _views(spark) == []
-
-
-def test_loop_session_concurrent_scopes_do_not_serialize(spark):
-    """Two threads' loops enter simultaneously — a shared barrier
-    inside both scopes releases only if neither blocks the other."""
-    import threading
-
-    from datafusion_archive_spark.operators.util import loop_session
-
-    barrier = threading.Barrier(2, timeout=30)
-    errs = []
-
-    def run():
-        try:
-            with loop_session(spark, 1000):
-                barrier.wait()
-        except Exception as exc:  # pragma: no cover - failure detail
-            errs.append(exc)
-
-    ts = [threading.Thread(target=run) for _ in range(2)]
-    for t in ts:
-        t.start()
-    for t in ts:
-        t.join(60)
-    assert errs == []
-
-
-def test_loop_session_handoff_outside_scope_raises(spark):
-    """A handoff before __enter__ or after __exit__ would return a
-    frame whose backing views are gone (or never created) — both must
-    fail loudly, and __exit__ is idempotent."""
-    from datafusion_archive_spark.operators.util import loop_session
-
-    df = spark.range(5)
-    ls = loop_session(spark, 5)
-    with pytest.raises(RuntimeError, match="state=new"):
-        ls.handoff(df)
-    with ls:
-        pass
-    with pytest.raises(RuntimeError, match="state=exited"):
-        ls.handoff(df)
-    with pytest.raises(RuntimeError, match="state=exited"):
-        ls.handback(df)
-    assert ls.__exit__(None, None, None) is False  # second exit: no-op
-
-
-def test_loop_session_nested_scopes_same_thread(spark):
-    """Nested loops on one thread run on separate child sessions:
-    they are independent and both compute correctly."""
-    from pyspark.sql import functions as F
-
-    from datafusion_archive_spark.operators.util import loop_session
-
-    df = spark.range(50).withColumn("g", F.col("id") % 5)
-    with loop_session(spark, 50) as outer:
-        o = outer.handoff(df)
-        with loop_session(spark, 50) as inner:
-            i = inner.handoff(df)
-            n_inner = i.groupBy("g").count().count()
-        assert n_inner == 5
-        assert o.groupBy("g").count().count() == 5
-
-
-# ---------------------------------------------------------------- #
 # diagnose_heap_oom: mid-job context-shutdown classification        #
 # ---------------------------------------------------------------- #
 
@@ -414,46 +272,6 @@ def test_diagnose_classifies_midjob_context_shutdown():
         is None
     )
     assert diagnose_heap_oom(ValueError("unrelated")) is None
-
-
-def test_loop_session_child_inherits_runtime_confs(spark):
-    """newSession() starts from the CONTEXT conf, which misses confs
-    set at runtime on an already-running context — so if a cached
-    handoff block were evicted mid-loop, the child would recompute
-    the upstream scan under Spark defaults (wrong timezone, the
-    events table's nanosAsLong unset). loop_session must clone the
-    caller's effective confs into the child (r14 review)."""
-    from datafusion_archive_spark.operators.util import loop_session
-
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        bare_child = spark.newSession()
-        # preconditions: the raw child genuinely lacks them (if Spark
-        # ever starts inheriting, this test can be retired)
-        assert (
-            bare_child.conf.get("spark.sql.session.timeZone")
-            != "America/New_York"
-            or bare_child.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-            != "true"
-        )
-        with loop_session(spark, 1000) as ls:
-            assert ls._child is not None
-            assert (
-                ls._child.conf.get("spark.sql.session.timeZone")
-                == "America/New_York"
-            )
-            assert (
-                ls._child.conf.get("spark.sql.legacy.parquet.nanosAsLong")
-                == "true"
-            )
-            # and the narrowing still wins over the cloned width
-            assert (
-                ls._child.conf.get("spark.sql.adaptive.enabled") == "false"
-            )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
 
 
 def test_sweep_scale_check_covers_small_log_and_plain_mode(tmp_path):

@@ -92,9 +92,7 @@ def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     # finish, and a silent partial answer would be wrong. Only the
     # distributed loop has rounds to run out of: force it (every test
     # graph is below the one-task cap)
-    from datafusion_archive_spark.operators import dedup as dd
-
-    monkeypatch.setattr(dd, "_BROADCAST_NODE_CAP", 0)
+    monkeypatch.setattr(op_util, "GRAPH_ROW_CAP", 0)
     chain = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(12)]
     )
@@ -145,12 +143,10 @@ def test_connected_components_shuffle_path_matches_broadcast(
     spark, monkeypatch
 ):
     """The node-count gate (round 11b follow-up) picks broadcast joins
-    on small graphs and shuffle joins past _BROADCAST_NODE_CAP; force
+    on small graphs and shuffle joins past util.GRAPH_ROW_CAP; force
     the cap to 0 so the shuffle path runs at toy scale and assert both
     strategies label every component identically (two chains + a star
     + an isolated pair)."""
-    from datafusion_archive_spark.operators import dedup as dd
-
     pairs = spark.createDataFrame(
         [Row(id_a=i, id_b=i + 1) for i in range(5)]
         + [Row(id_a=100, id_b=101), Row(id_a=100, id_b=102),
@@ -161,7 +157,7 @@ def test_connected_components_shuffle_path_matches_broadcast(
         (r.node, r.component)
         for r in connected_components(pairs).collect()
     }
-    monkeypatch.setattr(dd, "_BROADCAST_NODE_CAP", 0)
+    monkeypatch.setattr(op_util, "GRAPH_ROW_CAP", 0)
     got = {
         (r.node, r.component)
         for r in connected_components(pairs).collect()
