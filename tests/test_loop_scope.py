@@ -134,11 +134,10 @@ def test_handoff_keeps_cache_and_layout(spark):
         laid_out.unpersist()
 
 
-def test_loop_session_concurrent_scopes_do_not_serialize(spark):
-    """Two threads' loops enter simultaneously — a shared barrier
-    inside both scopes releases only if neither blocks the other —
-    and run on distinct children, so their narrowed widths cannot
-    collide."""
+def _two_concurrent_scopes(spark):
+    """Enter two loop scopes from two threads at once; a shared
+    barrier inside both releases only if neither blocks the other.
+    Returns the children the scopes ran on and any errors raised."""
     barrier = threading.Barrier(2, timeout=30)
     seen, errs = [], []
 
@@ -155,6 +154,21 @@ def test_loop_session_concurrent_scopes_do_not_serialize(spark):
         t.start()
     for t in ts:
         t.join(60)
+    return seen, errs
+
+
+def test_loop_session_concurrent_scopes_do_not_serialize(spark):
+    """Two threads' loops enter simultaneously and both get through
+    the barrier: neither scope blocks the other."""
+    seen, errs = _two_concurrent_scopes(spark)
+    assert errs == []
+    assert len(seen) == 2
+
+
+def test_concurrent_loops_get_distinct_children(spark):
+    """Two loops entered concurrently run on distinct children, so
+    their narrowed widths cannot collide."""
+    seen, errs = _two_concurrent_scopes(spark)
     assert errs == []
     assert len(seen) == 2 and seen[0] is not seen[1]
 
