@@ -72,13 +72,18 @@ PR_JOBS = 7
 
 
 class TestPageRank:
-    @pytest.mark.parametrize("path", ["one_task", "distributed"])
+    @pytest.mark.parametrize(
+        "path", ["one_task", "distributed", "distributed_shuffle"]
+    )
     def test_matches_numpy_power_iteration(self, spark, monkeypatch, path):
-        """Both paths against a pure-Python power iteration; the
-        distributed loop is forced by a zero edge cap, since no test
-        graph is large enough to reach it."""
-        if path == "distributed":
-            monkeypatch.setattr(op_util, "GRAPH_ROW_CAP", 0)
+        """Every path against a pure-Python power iteration; no test
+        graph is large enough to reach the distributed loop, so a
+        lowered cap forces it. ``distributed`` sets the cap to the node
+        count, below the undirected edge count: the loop runs with the
+        deg and rank vectors broadcast and the contribution table laid
+        out by dst (no per-iteration Exchange), as an above-cap graph
+        of at most GRAPH_ROW_CAP nodes does. ``distributed_shuffle``
+        sets it to 0: every join shuffles on the node id."""
         edges = _python_graph(spark)
         adj = defaultdict(set)
         for a, b in edges:
@@ -86,6 +91,20 @@ class TestPageRank:
             adj[b].add(a)
         nodes = sorted(adj)
         n = len(nodes)
+        if path == "distributed":
+            # n <= cap (broadcasts) and 2 x len(edges) directed edges
+            # > 2 x cap (no one-task kernel)
+            assert len(edges) > n
+            monkeypatch.setattr(op_util, "GRAPH_ROW_CAP", n)
+        elif path == "distributed_shuffle":
+            monkeypatch.setattr(op_util, "GRAPH_ROW_CAP", 0)
+        hints = []
+        real_broadcast = G.F.broadcast
+        monkeypatch.setattr(
+            G.F,
+            "broadcast",
+            lambda df: hints.append(df) or real_broadcast(df),
+        )
         r = {v: 1.0 / n for v in nodes}
         d = P9._PR_DAMPING
         for _ in range(P9._PR_ITERS):
@@ -101,6 +120,10 @@ class TestPageRank:
         assert set(got) == set(nodes)
         for v in nodes:
             assert math.isclose(got[v], r[v] * n, abs_tol=1e-4), v
+        # deg once, then the rank vector in every iteration
+        assert len(hints) == (
+            1 + P9._PR_ITERS if path == "distributed" else 0
+        )
 
     def test_mass_conserved(self, spark):
         total = (

@@ -10,7 +10,8 @@ on classic (py4j) sessions only.
   session: a cached input keeps its cache hit and its partitioning.
 - Scopes leave nothing behind: no listener, no module-level registry.
 - The job count of a connected-components call is pinned: the loop
-  runs with AQE off on the child, so the count is deterministic.
+  runs with AQE off on the child, so the count is deterministic. The
+  loop with its label broadcasts on gives the one-task labels.
 - ``get_spark`` rejects a session without a JVM context (Spark
   Connect) before touching it.
 - A child session that cannot be created is an error, not a degraded
@@ -23,6 +24,7 @@ import gc
 import threading
 import warnings
 import weakref
+from itertools import combinations
 
 import pytest
 from pyspark.sql import SparkSession
@@ -72,6 +74,36 @@ def test_connected_components_job_count_pinned(spark, jobs_of, monkeypatch):
     assert counts == [CC_JOBS, CC_JOBS]
     assert labels[0] == labels[1]
     assert len(labels[0]) == 12 + 10 + 4 + 3
+
+
+def test_connected_components_broadcast_loop(spark, monkeypatch):
+    """The propagation loop with its label-sized frames broadcast, as
+    an above-cap graph of at most GRAPH_ROW_CAP nodes runs it: a cap at
+    the node count, below the undirected edge count, forces the loop
+    and keeps the broadcasts on. The labels match the one-task path."""
+    # two 5-cliques joined by one edge, plus a triangle: 13 nodes, 24
+    # undirected edges
+    pairs = [
+        (a + o, b + o) for o in (0, 10) for a, b in combinations(range(5), 2)
+    ] + [(4, 10), (20, 21), (21, 22), (20, 22)]
+    pdf = spark.createDataFrame(pairs, "id_a long, id_b long")
+    want = sorted(tuple(r) for r in dedup.connected_components(pdf).collect())
+    assert want == sorted(
+        [(v, 0) for v in (*range(5), *range(10, 15))]
+        + [(v, 20) for v in (20, 21, 22)]
+    )
+    hints = []
+    real_broadcast = dedup.F.broadcast
+    monkeypatch.setattr(
+        dedup.F,
+        "broadcast",
+        lambda df: hints.append(df) or real_broadcast(df),
+    )
+    monkeypatch.setattr(util, "GRAPH_ROW_CAP", 13)
+    got = sorted(tuple(r) for r in dedup.connected_components(pdf).collect())
+    assert got == want
+    # three label-sized joins per round
+    assert hints and len(hints) % 3 == 0
 
 
 def test_loop_session_parent_conf_never_narrowed(spark):
