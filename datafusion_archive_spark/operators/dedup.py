@@ -27,6 +27,8 @@ The reference engine has no dedup surface; this is north-star work
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -579,12 +581,29 @@ def simhash_near_pairs(
     )
 
 
-def _cc_kernel(t):
-    """util.one_task kernel: NumPy min-label union-find over the
-    directed edge list, ids densified in sorted order (min label = min
-    id). Each round hooks every edge's u-root onto its smaller v-label,
+def _min_labels(u, v, n):
+    """NumPy min-label union-find over the nodes 0..n-1 and the
+    directed edges (u, v), which must hold both directions of every
+    edge: each node's label is the smallest node of its component.
+    Each round hooks every edge's u-root onto its smaller v-label,
     then jumps pointers to the roots. Hooking roots, not nodes, keeps
     rounds near log(n) (node labels: ~n/2 rounds on a shuffled path)."""
+    import numpy as np
+
+    lab = prev = np.arange(n)
+    while True:
+        lab = lab.copy()
+        np.minimum.at(lab, lab[u], lab[v])
+        while not np.array_equal(lab[lab], lab):
+            lab = lab[lab]
+        if np.array_equal(lab, prev):
+            return lab
+        prev = lab
+
+
+def _cc_kernel(t):
+    """util.one_task kernel: :func:`_min_labels` over the directed edge
+    list, ids densified in sorted order (min label = min id)."""
     import numpy as np
     import pyarrow as pa
 
@@ -593,19 +612,82 @@ def _cc_kernel(t):
         return_inverse=True,
     )
     u, v = np.split(inv, 2)
-    lab = prev = np.arange(len(ids))
-    while True:
-        lab = lab.copy()
-        np.minimum.at(lab, lab[u], lab[v])
-        while not np.array_equal(lab[lab], lab):
-            lab = lab[lab]
-        if np.array_equal(lab, prev):
-            break
-        prev = lab
+    lab = _min_labels(u, v, len(ids))
     typ = t.schema.field("u").type
     yield pa.RecordBatch.from_arrays(
         [pa.array(ids, type=typ), pa.array(ids[lab], type=typ)],
         names=["node", "component"],
+    )
+
+
+def _lsh_cluster_kernel(t, num_hashes, bands, threshold):
+    """util.one_task kernel of :func:`dedup_clusters`: the LSH pairs of
+    :func:`minhash_lsh_pairs`, their connected components and one
+    ``(keep_id, cluster_size)`` row per component, over the signature
+    table ``(id, mh_0, ...)``.
+
+    Rows are densified in id order, so a smaller index is a smaller id.
+    Each band sorts the rows by its ``num_hashes/bands`` minhash values:
+    equal tuples are equal bucket strings, as the values are non-null
+    longs. The pairs of each run of same-size buckets are verified on
+    the full signature before the next run is made, at most n
+    candidates at a time (or one bucket's, if it alone has more), so
+    the worker holds verified edges, never the candidate cross product. A pair that also shares an earlier band is
+    dropped there, so each edge is kept once. The verify filter is
+    minhash_lsh_pairs's ``round(agree/num_hashes, 4) >= threshold``:
+    HALF_UP rounding, exact for agree/16."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    typ = t.schema.field("id").type
+    t = t.filter(pc.is_valid(t["id"]))  # a null id pairs with nothing
+    ids = t["id"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    mh = [t[f"mh_{i}"].to_numpy()[order] for i in range(num_hashes)]
+    del t, order
+    n = len(ids)
+    agree_ok = (
+        np.floor(np.arange(num_hashes + 1) / num_hashes * 10**4 + 0.5)
+        / 10**4
+        >= threshold
+    )
+    per_band = num_hashes // bands
+    ea, eb = [], []
+    for band in range(bands):
+        cols = mh[band * per_band : (band + 1) * per_band]
+        srt = np.lexsort(cols[::-1])
+        new = np.zeros(n, bool)
+        new[:1] = True
+        for c in cols:
+            c = c[srt]
+            new[1:] |= c[1:] != c[:-1]
+        starts = np.flatnonzero(new)
+        sizes = np.diff(starts, append=n)
+        for size in np.unique(sizes[sizes > 1]):
+            first = starts[sizes == size]
+            iu, ju = np.triu_indices(size, 1)
+            step = max(1, n // len(iu))
+            for k in range(0, len(first), step):
+                members = srt[first[k : k + step, None] + np.arange(size)]
+                a, b = members[:, iu].ravel(), members[:, ju].ravel()
+                eq = [c[a] == c[b] for c in mh]
+                ok = agree_ok[sum(eq)]
+                for j in range(0, band * per_band, per_band):
+                    ok &= ~np.logical_and.reduce(eq[j : j + per_band])
+                ea.append(a[ok])
+                eb.append(b[ok])
+    if not ea:
+        return
+    a, b = np.concatenate(ea), np.concatenate(eb)
+    del ea, eb
+    lab = _min_labels(np.concatenate([a, b]), np.concatenate([b, a]), n)
+    roots, sizes = np.unique(lab, return_counts=True)
+    big = sizes > 1
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(ids[roots[big]], type=typ), pa.array(sizes[big])],
+        names=["keep_id", "cluster_size"],
     )
 
 
@@ -670,12 +752,19 @@ def connected_components(
     # the de-dup shuffle of the raw pair list (potentially the large
     # input) runs HERE, under the caller's conf — full shuffle width
     # and AQE apply to the one data-sized stage; the lazy one-task
-    # result reads the cache after this returns.
+    # result reads the cache after this returns. Both directions come
+    # from one pass over the pairs: a union of two projections would
+    # plan the whole pair pipeline twice.
     edges = cached(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .unionByName(
-            pairs.select(F.col(b_col).alias("u"), F.col(a_col).alias("v"))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+                    F.struct(F.col(b_col).alias("u"), F.col(a_col).alias("v")),
+                )
+            ).alias("e")
         )
+        .select("e.u", "e.v")
         .distinct()
     )
     n_edges = edges.count()
@@ -825,9 +914,33 @@ def dedup_clusters(
     threshold: float = 0.5,
 ) -> DataFrame:
     """End-to-end near-dup clustering: MinHash-LSH candidate pairs →
-    connected components → one row per cluster with the kept (min-id)
-    doc and the cluster size."""
-    pairs = minhash_lsh_pairs(df, text_col, id_col, threshold=threshold)
+    connected components → one row per cluster of two or more
+    documents, with the kept (min-id) doc and the cluster size.
+
+    Spark builds and caches the MinHash signatures (the data-parallel
+    part) and takes one real count of them, which picks the path:
+
+    - at most util.GRAPH_ROW_CAP documents: a lazy util.one_task frame
+      runs the banding, the verification, the union-find and the
+      cluster rows in one Python worker (_lsh_cluster_kernel);
+    - above it: :func:`minhash_lsh_pairs` → :func:`connected_components`
+      → a groupBy on the component, all as Spark jobs.
+
+    Both paths give the same rows."""
+    num_hashes, bands = 16, 4
+    sig = cached(minhash_signatures(df, text_col, id_col, num_hashes))
+    if sig.count() <= _util.GRAPH_ROW_CAP:
+        typ = sig.schema["id"].dataType.simpleString()
+        kernel = functools.partial(
+            _lsh_cluster_kernel,
+            num_hashes=num_hashes,
+            bands=bands,
+            threshold=threshold,
+        )
+        return one_task(sig, kernel, f"keep_id {typ}, cluster_size bigint")
+    pairs = minhash_lsh_pairs(
+        df, text_col, id_col, num_hashes, bands, threshold=threshold
+    )
     comp = connected_components(pairs)
     return (
         comp.groupBy("component")

@@ -6,6 +6,7 @@ import os
 import re
 import warnings
 
+from pyspark import RDD
 from pyspark.sql import DataFrame
 
 #: DataFrames persisted by operator internals, awaiting release. The
@@ -179,9 +180,10 @@ def loop_parts(spark, n_rows: int) -> int:
     return min(max(dp, lo), hi)
 
 
-#: the one size bound of the graph operators (dedup.connected_components
-#: and graph.pagerank / triangle_stats), checked against one real count,
-#: never Catalyst's carried checkpoint estimates:
+#: the one size bound of the graph operators (dedup.connected_components,
+#: dedup.dedup_clusters and graph.pagerank / triangle_stats), checked
+#: against one real count, never Catalyst's carried checkpoint
+#: estimates:
 #:
 #: - a node- or edge-sized frame of at most this many rows is broadcast
 #:   into joins (2M rows x ~32 B is ~64 MB, or ~50-70 MB built for the
@@ -192,7 +194,13 @@ def loop_parts(spark, n_rows: int) -> int:
 #:   through :func:`one_task`; past it the loop runs as Spark jobs in a
 #:   :class:`loop_session`. At 3.8M directed edges (4 cores,
 #:   tools/probe_loop_scope.log) connected components took 5.5 s in one
-#:   task, with a ~570 MB worker peak RSS, against 26 s in the loop.
+#:   task, with a ~570 MB worker peak RSS, against 26 s in the loop;
+#: - a corpus of at most this many documents with a MinHash signature
+#:   (16 longs each) is banded, verified and clustered in one Python
+#:   worker (dedup_clusters); past it the pairs and their components
+#:   are Spark jobs. At the cap (4 cores, every document in a
+#:   3-document cluster, tools/dedup_one_task_ab.log) the task took
+#:   13-14 s with a ~1 GB worker peak RSS, 350 MB of it the Arrow input.
 GRAPH_ROW_CAP = 2_000_000
 
 
@@ -342,7 +350,13 @@ class loop_session:
         self._n_rows = n_rows
 
     def __enter__(self):
-        child = self._spark.newSession()
+        # pyspark's SparkSession constructor rebinds RDD.toDF to the
+        # session it builds; keep it on the caller's
+        to_df = RDD.toDF
+        try:
+            child = self._spark.newSession()
+        finally:
+            RDD.toDF = to_df
         for key, val in self._spark.conf.getAll.items():
             try:
                 child.conf.set(key, val)

@@ -81,11 +81,11 @@ def jobs_of(spark):
 
 @pytest.fixture(params=["one_task", "distributed"])
 def cc_path(request, monkeypatch):
-    """Runs a connected-components test on both paths: ``one_task`` as
-    shipped (every test graph is below the cap), ``distributed`` with
-    ``util.GRAPH_ROW_CAP`` forced below any edge count so the
-    propagation loop runs (-1, not 0: an empty edge list is at a cap
-    of 0)."""
+    """Runs a connected-components or ``dedup_clusters`` test on both
+    paths: ``one_task`` as shipped (every test graph and corpus is
+    below the cap), ``distributed`` with ``util.GRAPH_ROW_CAP`` forced
+    below any edge or document count so the Spark jobs run (-1, not 0:
+    an empty input is at a cap of 0)."""
     if request.param == "distributed":
         from datafusion_archive_spark.operators import util
 

@@ -8,7 +8,8 @@ on classic (py4j) sessions only.
   refuses warns, a static one does not.
 - ``handoff``/``handback`` rebind a frame's analyzed plan to the other
   session: a cached input keeps its cache hit and its partitioning.
-- Scopes leave nothing behind: no listener, no module-level registry.
+- Scopes leave nothing behind: no listener, no module-level registry,
+  and ``RDD.toDF`` still builds frames on the caller's session.
 - The job count of a connected-components call is pinned: the loop
   runs with AQE off on the child, so the count is deterministic. The
   loop with its label broadcasts on gives the one-task labels.
@@ -221,9 +222,10 @@ def test_loop_session_nested_scopes_same_thread(spark):
 
 def test_sequential_scopes_leave_nothing_behind(spark):
     """50 sequential scopes: the shared listener bus holds as many
-    listeners as before, and once the scopes' frames are gone no
-    child session is still referenced from Python (``util`` keeps no
-    module-level registry of them)."""
+    listeners as before, once the scopes' frames are gone no child
+    session is still referenced from Python (``util`` keeps no
+    module-level registry of them), and ``rdd.toDF()`` builds on the
+    caller's session."""
     bus = spark.sparkContext._jsc.sc().listenerBus()
     before = bus.listeners().size()
     children = []
@@ -234,10 +236,11 @@ def test_sequential_scopes_leave_nothing_behind(spark):
             children.append(weakref.ref(ls.session))
     del ls
     gc.collect()
-    # the newest child is exempt: pyspark's SparkSession constructor
-    # rebinds RDD.toDF to a closure over the session it builds
-    assert [c for c in children[:-1] if c() is not None] == []
+    assert [c for c in children if c() is not None] == []
     assert bus.listeners().size() == before
+    # pyspark's SparkSession constructor rebinds RDD.toDF to the
+    # session it builds; the scopes put it back on the caller's
+    assert spark.sparkContext.parallelize([(1,)]).toDF().sparkSession is spark
 
 
 def test_loop_session_child_inherits_runtime_confs(spark):

@@ -1,11 +1,20 @@
 """Bounded iterative operators run as one Arrow task
 (``operators.util.one_task``): the helper's contract, the job counts of
-the queries built on it, and the BPE trainer's semantics pins.
+the queries built on it, near-dup clustering's two paths against
+planted clusters, and the BPE trainer's semantics pins.
 
 Job counts are deterministic counters, not timings: a pin that moves
 means the job structure changed. Each pin warms its query once (the
 first build in a session runs cold-only jobs), then releases the
 operator caches and counts one build + collect at sf0.001.
+``dedup_clusters`` runs its signature build and count as Spark jobs and
+everything after them in one task; ``dbscan_clusters`` runs connected
+components in one task after its pair build.
+
+``dedup_clusters`` is checked on both of its paths (the ``cc_path``
+fixture): the one-task kernel as shipped, and the Spark pair build,
+connected components and groupBy with ``util.GRAPH_ROW_CAP`` forced
+below any document count.
 """
 
 from __future__ import annotations
@@ -13,7 +22,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
-from datafusion_archive_spark.operators import bpe
+from datafusion_archive_spark.operators import bpe, dedup
 from datafusion_archive_spark.operators.util import one_task, release_caches
 from datafusion_archive_spark.queries import llm, pipeline4, pipeline60
 
@@ -49,10 +58,8 @@ class TestOneTask:
     [
         (pipeline4.q_bpe_merges, lambda n: n == 2),
         (pipeline4.q_bpe_encode_tokens, lambda n: n == 4),
-        # 13 or 14: the spread predates the one-task path (26 or 27
-        # then), so it is not a connected-components round
-        (llm.q_dedup_clusters, lambda n: n <= 14),
-        (pipeline60.q_dbscan_clusters, lambda n: n == 34),
+        (llm.q_dedup_clusters, lambda n: n == 6),
+        (pipeline60.q_dbscan_clusters, lambda n: n == 31),
     ],
     ids=["bpe_merges", "bpe_encode_tokens", "dedup_clusters",
          "dbscan_clusters"],
@@ -64,6 +71,78 @@ def test_job_count_pinned(spark, sf_dir, jobs_of, query, pin):
     release_caches()
     assert rows
     assert pin(n), n
+
+
+def _text(prefix, swaps=None):
+    """16 words ``<prefix>0 .. <prefix>15``, word i replaced by
+    ``<prefix><swaps[i]>``."""
+    return " ".join(f"{prefix}{(swaps or {}).get(i, i)}" for i in range(16))
+
+
+#: planted near-duplicates (16 minhashes in 4 bands; agreement counts
+#: read off the signatures): 1~2 agree on 12/16 and 2~3 on 9/16, but
+#: 1 and 3 share no band (6/16), so only the chain joins them; 4 and 5
+#: share a band yet agree on 6/16, so the verify filter splits them at
+#: any threshold above 0.375; 6-8 are exact duplicates (one bucket of
+#: three in every band); 9 is a singleton; 10-12 have no content
+_PLANTED = [
+    (1, _text("w", {11: 165})),
+    (2, _text("w")),
+    (3, _text("w", {6: 95})),
+    (4, _text("x")),
+    (5, _text("x", {3: 37, 5: 178, 14: 22})),
+    (6, "the quick brown fox jumps over the lazy dog again"),
+    (7, "the quick brown fox jumps over the lazy dog again"),
+    (8, "the quick brown fox jumps over the lazy dog again"),
+    (9, "an unrelated document about something else entirely"),
+    (10, "   "),
+    (11, "\t\n "),
+    (12, None),
+]
+
+_DOCS = "doc_id bigint, text string"
+
+
+class TestDedupClustersPaths:
+    @pytest.mark.parametrize(
+        "threshold, pairs, clusters",
+        [
+            (
+                0.25,
+                {(1, 2), (2, 3), (4, 5), (6, 7), (6, 8), (7, 8)},
+                [(1, 3), (4, 2), (6, 3)],
+            ),
+            (
+                0.5,
+                {(1, 2), (2, 3), (6, 7), (6, 8), (7, 8)},
+                [(1, 3), (6, 3)],
+            ),
+        ],
+        ids=["threshold0.25", "threshold0.5"],
+    )
+    def test_planted_clusters(self, spark, cc_path, threshold, pairs,
+                              clusters):
+        docs = spark.createDataFrame(_PLANTED, _DOCS)
+        got_pairs = dedup.minhash_lsh_pairs(docs, threshold=threshold)
+        assert {(r.id_a, r.id_b) for r in got_pairs.collect()} == pairs
+        out = dedup.dedup_clusters(docs, threshold=threshold)
+        assert out.columns == ["keep_id", "cluster_size"]
+        assert sorted(tuple(r) for r in out.collect()) == clusters
+        release_caches()
+
+    @pytest.mark.parametrize(
+        "rows",
+        [[], [(1, "one document alone in its corpus")], _PLANTED[-3:]],
+        ids=["empty", "single", "whitespace"],
+    )
+    def test_no_clusters(self, spark, cc_path, rows):
+        docs = spark.createDataFrame(rows, _DOCS)
+        out = dedup.dedup_clusters(docs, threshold=0.5)
+        assert out.collect() == []
+        assert out.schema.simpleString() == (
+            "struct<keep_id:bigint,cluster_size:bigint>"
+        )
+        release_caches()
 
 
 def _merges(spark, words, n_merges):
