@@ -632,8 +632,9 @@ def _lsh_cluster_kernel(t, num_hashes, bands, threshold):
     longs. The pairs of each run of same-size buckets are verified on
     the full signature before the next run is made, at most n
     candidates at a time (or one bucket's, if it alone has more), so
-    the worker holds verified edges, never the candidate cross product. A pair that also shares an earlier band is
-    dropped there, so each edge is kept once. The verify filter is
+    the worker holds verified edges, never the candidate cross product.
+    A pair that also shares an earlier band is dropped there, so each
+    edge is kept once. The verify filter is
     minhash_lsh_pairs's ``round(agree/num_hashes, 4) >= threshold``:
     HALF_UP rounding, exact for agree/16."""
     import numpy as np
