@@ -38,8 +38,10 @@ from datafusion_archive_spark.operators import util as _util
 from datafusion_archive_spark.operators.util import (
     cached,
     loop_session as _loop_session,
+    materialized,
     one_task,
     spread,
+    unpersist_checkpoint,
 )
 
 
@@ -341,14 +343,22 @@ def minhash_lsh_pairs(
     Returns ``(id_a < id_b, est_jaccard)``.
     """
     assert num_hashes % bands == 0
-    rows_per_band = num_hashes // bands
     # Persist: the banding explode and the self-join below would
     # otherwise recompute the signature aggregation once per plan
     # branch. Signatures are tiny relative to the corpus (id +
     # num_hashes longs/doc ≈ 136 B — ~140 GB even for 10^9 docs,
     # spillable), so caching them is the intended scale design.
     sig = cached(minhash_signatures(df, text_col, id_col, num_hashes, k))
+    return _lsh_pairs(sig, num_hashes, bands, threshold)
 
+
+def _lsh_pairs(
+    sig: DataFrame, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    """The LSH banding, candidate self-join and verify filter of
+    :func:`minhash_lsh_pairs` over a signature table ``(id, mh_0,
+    ...)``, which the plan reads several times: pass it materialized."""
+    rows_per_band = num_hashes // bands
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
     band_structs = []
     for b in range(bands):
@@ -607,13 +617,14 @@ def _cc_kernel(t):
     import numpy as np
     import pyarrow as pa
 
+    typ = t.schema.field("u").type
     ids, inv = np.unique(
         np.concatenate([t["u"].to_numpy(), t["v"].to_numpy()]),
         return_inverse=True,
     )
+    del t
     u, v = np.split(inv, 2)
     lab = _min_labels(u, v, len(ids))
-    typ = t.schema.field("u").type
     yield pa.RecordBatch.from_arrays(
         [pa.array(ids, type=typ), pa.array(ids[lab], type=typ)],
         names=["node", "component"],
@@ -718,10 +729,11 @@ def connected_components(
     components, the standard way corpus dedup turns pairwise LSH
     matches into keep-one groups at scale.
 
-    One real count of the de-duplicated directed edge list picks the
-    path. At most 2 x util.GRAPH_ROW_CAP directed edges (the cap counts
-    undirected edges, as for graph.pagerank): a lazy util.one_task
-    frame labels the whole graph (_cc_kernel), with no round limit.
+    The row count of the de-duplicated directed edge list, observed on
+    the job that materializes it, picks the path. At most 2 x
+    util.GRAPH_ROW_CAP directed edges (the cap counts undirected
+    edges, as for graph.pagerank): a lazy util.one_task frame labels
+    the whole graph (_cc_kernel), with no round limit.
     Above it: min-label propagation in a util.loop_session child
     (AQE off, loop-sized shuffle width), each iteration a join + a
     min-aggregate, all shuffles on the node id.
@@ -752,11 +764,12 @@ def connected_components(
     """
     # the de-dup shuffle of the raw pair list (potentially the large
     # input) runs HERE, under the caller's conf — full shuffle width
-    # and AQE apply to the one data-sized stage; the lazy one-task
-    # result reads the cache after this returns. Both directions come
-    # from one pass over the pairs: a union of two projections would
-    # plan the whole pair pipeline twice.
-    edges = cached(
+    # and AQE apply to the one data-sized stage; its checkpoint job
+    # also counts the edges, and the lazy one-task result reads the
+    # checkpoint after this returns. Both directions come from one
+    # pass over the pairs: a union of two projections would plan the
+    # whole pair pipeline twice.
+    edges, n_edges = materialized(
         pairs.select(
             F.explode(
                 F.array(
@@ -768,7 +781,6 @@ def connected_components(
         .select("e.u", "e.v")
         .distinct()
     )
-    n_edges = edges.count()
     if n_edges <= 2 * _util.GRAPH_ROW_CAP:
         typ = edges.schema["u"].dataType.simpleString()
         return cached(
@@ -897,7 +909,7 @@ def connected_components(
         # to the caller's session; downstream consumers then execute
         # under the caller's conf
         result = ls.handback(labels_l)
-    edges.unpersist()
+    unpersist_checkpoint(edges)
     labels.unpersist()
     if changed != 0:
         raise RuntimeError(
@@ -918,19 +930,23 @@ def dedup_clusters(
     connected components → one row per cluster of two or more
     documents, with the kept (min-id) doc and the cluster size.
 
-    Spark builds and caches the MinHash signatures (the data-parallel
-    part) and takes one real count of them, which picks the path:
+    Spark builds the MinHash signatures (the data-parallel part) and
+    checkpoints them; the row count observed on that materializing
+    job picks the path:
 
     - at most util.GRAPH_ROW_CAP documents: a lazy util.one_task frame
       runs the banding, the verification, the union-find and the
       cluster rows in one Python worker (_lsh_cluster_kernel);
-    - above it: :func:`minhash_lsh_pairs` → :func:`connected_components`
-      → a groupBy on the component, all as Spark jobs.
+    - above it: the pairs of :func:`minhash_lsh_pairs` over the same
+      checkpointed signatures → :func:`connected_components` → a
+      groupBy on the component, all as Spark jobs.
 
     Both paths give the same rows."""
     num_hashes, bands = 16, 4
-    sig = cached(minhash_signatures(df, text_col, id_col, num_hashes))
-    if sig.count() <= _util.GRAPH_ROW_CAP:
+    sig, n_docs = materialized(
+        minhash_signatures(df, text_col, id_col, num_hashes)
+    )
+    if n_docs <= _util.GRAPH_ROW_CAP:
         typ = sig.schema["id"].dataType.simpleString()
         kernel = functools.partial(
             _lsh_cluster_kernel,
@@ -939,9 +955,7 @@ def dedup_clusters(
             threshold=threshold,
         )
         return one_task(sig, kernel, f"keep_id {typ}, cluster_size bigint")
-    pairs = minhash_lsh_pairs(
-        df, text_col, id_col, num_hashes, bands, threshold=threshold
-    )
+    pairs = _lsh_pairs(sig, num_hashes, bands, threshold)
     comp = connected_components(pairs)
     return (
         comp.groupBy("component")

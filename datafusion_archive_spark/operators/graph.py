@@ -15,9 +15,10 @@ queries); these follow the classic MapReduce formulations
 (compact-forward triangle counting; power-iteration PageRank).
 
 The one exception is PageRank on a graph of at most
-util.GRAPH_ROW_CAP undirected edges: its whole power iteration runs
-as one mapInArrow task over the edge list. Above the cap it is the
-distributed join + aggregate loop.
+util.GRAPH_ROW_CAP undirected edges, going by the row count observed
+on the materializing job of its directed edge list: its whole power
+iteration runs as one mapInArrow task over the edge list. Above the
+cap it is the distributed join + aggregate loop.
 """
 
 from __future__ import annotations
@@ -30,16 +31,18 @@ from datafusion_archive_spark.operators.util import (
     cached,
     loop_parts,
     loop_session,
+    materialized,
     one_task,
 )
 
 
 def _materialize(fn):
-    """Run an eager graph materialization (count / localCheckpoint),
-    converting a JVM heap OOM into a diagnosable error. The graph
-    family is the registry's heaviest iterative surface: on a BARE
-    local session (spark.driver.memory default 1g — driver and all
-    executor threads share one heap) the sf0.1 co-purchase graph dies
+    """Run an eager graph materialization (count / localCheckpoint /
+    util.materialized), converting a JVM heap OOM into a diagnosable
+    error. The graph family is the registry's heaviest iterative
+    surface: on a BARE local session (spark.driver.memory default 1g —
+    driver and all executor threads share one heap) the sf0.1
+    co-purchase graph dies
     in shuffle writes (r10 sweep; scale_probe_r8), while
     session.get_spark provisions 8g. Pinning the boundary here means a
     vanilla-session caller gets told WHAT to fix instead of a raw
@@ -239,10 +242,12 @@ def _pagerank_kernel(damping: float, iterations: int):
         import numpy as np
         import pyarrow as pa
 
+        typ = t.schema.field("src").type
         ids, inv = np.unique(
             np.concatenate([t["src"].to_numpy(), t["dst"].to_numpy()]),
             return_inverse=True,
         )
+        del t
         src, dst = np.split(inv, 2)
         n = len(ids)
         deg = np.bincount(src, minlength=n).astype(np.float64)
@@ -255,7 +260,7 @@ def _pagerank_kernel(damping: float, iterations: int):
                 dst, weights=(r / deg)[src], minlength=n
             )
         yield pa.RecordBatch.from_arrays(
-            [pa.array(ids, type=t.schema.field("src").type),
+            [pa.array(ids, type=typ),
              pa.array(r * float(n))],
             names=["node", "rank"],
         )
@@ -276,7 +281,8 @@ def pagerank(
     undirected graph has deg ≥ 1, so there are no dangling nodes and
     rank mass is conserved by construction.
 
-    The path is chosen by one real count of the directed edge list:
+    The path is chosen by the row count of the directed edge list,
+    observed on the job that materializes it:
 
     - at most 2 x util.GRAPH_ROW_CAP directed edges (the cap counts
       undirected edges, as for dedup.connected_components): a lazy
@@ -293,21 +299,21 @@ def pagerank(
       discipline as dedup.connected_components); the only
       driver-side values are the scalar counts and the iteration
       count."""
-    # cached BEFORE anything derives from it (round 15): the upstream
-    # edge construction (a basket self-join for co-occurrence graphs)
-    # is the data-sized stage, and `directed` feeds the count below
-    # and then either the one-task kernel or every step of the
-    # distributed loop; 2 longs/edge, spillable, released via the
-    # registry like every operator-internal persist.
-    directed = cached(
-        edges.select("src", "dst").unionAll(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
+    # checkpointed BEFORE anything derives from it (round 15): the
+    # upstream edge construction (a basket self-join for co-occurrence
+    # graphs) is the data-sized stage, and `directed` feeds either the
+    # one-task kernel or every step of the distributed loop; 2
+    # longs/edge, spillable, released via the registry. The one job
+    # that materializes it, under the CALLER's conf, also counts it.
+    directed, n_directed = _materialize(
+        lambda: materialized(
+            edges.select("src", "dst").unionAll(
+                edges.select(
+                    F.col("dst").alias("src"), F.col("src").alias("dst")
+                )
             )
         )
     )
-    # materializes the cache under the CALLER's conf
-    n_directed = _materialize(directed.count)
     # the cap counts undirected edges; the directed list holds each twice
     if n_directed <= 2 * _util.GRAPH_ROW_CAP:
         node_type = directed.schema["src"].dataType.simpleString()

@@ -5,19 +5,23 @@ from __future__ import annotations
 import os
 import re
 import warnings
+from typing import Callable
 
-from pyspark import RDD
-from pyspark.sql import DataFrame
+from pyspark import RDD, StorageLevel
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
-#: DataFrames persisted by operator internals, awaiting release. The
-#: operators in this package persist small intermediates (signatures,
-#: normalized vectors) that outlive the returned lazy DataFrame, so
-#: they cannot unpersist them themselves. ``cached()`` registers each
-#: one here; harnesses (bench.py, tools/check_oracle.py) and each new
-#: query invocation call :func:`release_caches` once the previous
-#: result has been consumed, keeping a long session's cache footprint
-#: bounded to one query's working set.
-_ACTIVE_CACHES: list[DataFrame] = []
+#: One release callable per frame that operator internals persisted
+#: or checkpointed. The operators in this package pin small
+#: intermediates (signatures, normalized vectors, edge lists) that
+#: outlive the returned lazy DataFrame, so they cannot free them
+#: themselves. ``cached()`` registers each persisted frame's unpersist
+#: and ``materialized()`` each checkpoint's; harnesses (bench.py,
+#: tools/check_oracle.py) and each new query invocation call
+#: :func:`release_caches` once the previous result has been consumed,
+#: keeping a long session's footprint bounded to one query's working
+#: set.
+_ACTIVE_CACHES: list[Callable[[], object]] = []
 
 
 def cached(df: DataFrame) -> DataFrame:
@@ -29,16 +33,47 @@ def cached(df: DataFrame) -> DataFrame:
     """
     if not df.is_cached:
         df = df.persist()
-    _ACTIVE_CACHES.append(df)
+    _ACTIVE_CACHES.append(df.unpersist)
     return df
 
 
+def materialized(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` materialized now, and its row count, from one job: an
+    eager local checkpoint with the count observed on it (the same
+    ``Observation`` the connected-components loop reads its
+    convergence count from), so picking a path costs no count job.
+
+    The checkpoint keeps Spark's default deserialized level, chosen by
+    measurement on the sf0.1 PageRank edge list (2.39M directed edges,
+    4 cores, 5 interleaved reps): the build took 2.45 s and the
+    one-task read 2.42 s, against 2.86 s and 3.11 s serialized
+    (pyspark's ``MEMORY_AND_DISK``), at 191.6 MB of storage memory
+    against 23.3 MB serialized and 36.6 MB as a columnar cache. Its
+    blocks are registered for :func:`release_caches`; a frame read
+    from the checkpoint fails once they are released, where a
+    released cache would recompute.
+    """
+    obs = Observation()
+    ck = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
+    )
+    _ACTIVE_CACHES.append(lambda: unpersist_checkpoint(ck))
+    return ck, obs.get["n"]
+
+
+def unpersist_checkpoint(ck: DataFrame) -> None:
+    """Free the blocks of the local checkpoint ``ck`` now; unreleased,
+    they stay in the block manager until the JVM collects the RDD.
+    Freeing them twice is a no-op."""
+    ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
 def release_caches() -> None:
-    """Unpersist every operator-internal cache registered since the
-    last release. Safe to call at any point where no previously
-    returned (still-lazy) DataFrame will be re-executed."""
+    """Free every operator-internal cache and checkpoint registered
+    since the last release. Safe to call at any point where no
+    previously returned (still-lazy) DataFrame will be re-executed."""
     while _ACTIVE_CACHES:
-        _ACTIVE_CACHES.pop().unpersist()
+        _ACTIVE_CACHES.pop()()
 
 
 #: (sf_dir, table) → (session, lazy DataFrame handle). Handles only —
@@ -182,7 +217,8 @@ def loop_parts(spark, n_rows: int) -> int:
 
 #: the one size bound of the graph operators (dedup.connected_components,
 #: dedup.dedup_clusters and graph.pagerank / triangle_stats), checked
-#: against one real count, never Catalyst's carried checkpoint
+#: against real row counts (the row count observed on the materializing
+#: job where it picks a path), never Catalyst's carried checkpoint
 #: estimates:
 #:
 #: - a node- or edge-sized frame of at most this many rows is broadcast
@@ -200,7 +236,8 @@ def loop_parts(spark, n_rows: int) -> int:
 #:   worker (dedup_clusters); past it the pairs and their components
 #:   are Spark jobs. At the cap (4 cores, every document in a
 #:   3-document cluster, tools/dedup_one_task_ab.log) the task took
-#:   13-14 s with a ~1 GB worker peak RSS, 350 MB of it the Arrow input.
+#:   13-18 s with a ~710 MB worker peak RSS (the kernel frees its
+#:   350 MB Arrow input once converted).
 GRAPH_ROW_CAP = 2_000_000
 
 
@@ -208,14 +245,21 @@ def one_task(df: DataFrame, kernel, schema: str) -> DataFrame:
     """The lazy frame ``df.coalesce(1).mapInArrow(...)``: ``kernel``
     gets ALL rows as one ``pyarrow.Table`` and yields RecordBatches of
     ``schema``; empty input gives no rows. Bounded iterative operators
-    run their whole loop this way instead of one Spark job per round."""
+    run their whole loop this way instead of one Spark job per round.
+
+    The kernel holds the only reference to the table: a kernel that
+    drops it once converted frees the Arrow input for the rest of its
+    run."""
 
     def fn(batches):
         import pyarrow as pa
 
         batches = list(batches)
-        if batches and sum(b.num_rows for b in batches):
-            yield from kernel(pa.Table.from_batches(batches))
+        if not (batches and sum(b.num_rows for b in batches)):
+            return
+        out = kernel(pa.Table.from_batches(batches))
+        del batches
+        yield from out
 
     return df.coalesce(1).mapInArrow(fn, schema)
 

@@ -66,9 +66,10 @@ class TestTriangles:
 
 
 #: jobs one ``q_graph_pagerank`` build + collect runs at sf0.001 on
-#: the one-task path: the edge-list count under the caller's conf
-#: (with its AQE query-stage jobs) plus the collect
-PR_JOBS = 7
+#: the one-task path: the edge-list checkpoint under the caller's conf,
+#: which also counts the edges (with its AQE query-stage jobs), plus
+#: the collect
+PR_JOBS = 5
 
 
 class TestPageRank:

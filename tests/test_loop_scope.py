@@ -35,11 +35,11 @@ from datafusion_archive_spark.operators import dedup, util
 from datafusion_archive_spark.operators.util import loop_parts, loop_session
 
 #: jobs one ``connected_components`` call runs on the graph below
-#: with the one-task cap forced to 0: the edge and node counts under
-#: the caller's conf plus the rounds of the AQE-off loop on the child
-#: session. The forced cap also turns the label broadcasts, and their
-#: broadcast jobs, off.
-CC_JOBS = 15
+#: with the one-task cap forced to 0: the edge checkpoint (which also
+#: counts the edges) and the node count under the caller's conf plus
+#: the rounds of the AQE-off loop on the child session. The forced cap
+#: also turns the label broadcasts, and their broadcast jobs, off.
+CC_JOBS = 11
 
 
 def _pairs():

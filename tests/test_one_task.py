@@ -7,24 +7,38 @@ Job counts are deterministic counters, not timings: a pin that moves
 means the job structure changed. Each pin warms its query once (the
 first build in a session runs cold-only jobs), then releases the
 operator caches and counts one build + collect at sf0.001.
-``dedup_clusters`` runs its signature build and count as Spark jobs and
-everything after them in one task; ``dbscan_clusters`` runs connected
-components in one task after its pair build.
+``dedup_clusters`` runs its signature build as Spark jobs, counted on
+the job that checkpoints it, and everything after them in one task;
+``dbscan_clusters`` runs connected components in one task after its
+pair build.
 
 ``dedup_clusters`` is checked on both of its paths (the ``cc_path``
 fixture): the one-task kernel as shipped, and the Spark pair build,
 connected components and groupBy with ``util.GRAPH_ROW_CAP`` forced
 below any document count.
+
+PageRank, connected components and ``dedup_clusters`` read their
+path-picking row count off the job that checkpoints their input: the
+checkpoints are freed by ``release_caches()``, and an empty input of
+any shape gives no rows without waiting on the count.
 """
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
-from datafusion_archive_spark.operators import bpe, dedup
+from datafusion_archive_spark.operators import bpe, dedup, graph
 from datafusion_archive_spark.operators.util import one_task, release_caches
-from datafusion_archive_spark.queries import llm, pipeline4, pipeline60
+from datafusion_archive_spark.queries import (
+    llm,
+    pipeline4,
+    pipeline9,
+    pipeline60,
+)
 
 
 class TestOneTask:
@@ -58,8 +72,8 @@ class TestOneTask:
     [
         (pipeline4.q_bpe_merges, lambda n: n == 2),
         (pipeline4.q_bpe_encode_tokens, lambda n: n == 4),
-        (llm.q_dedup_clusters, lambda n: n == 6),
-        (pipeline60.q_dbscan_clusters, lambda n: n == 31),
+        (llm.q_dedup_clusters, lambda n: n == 4),
+        (pipeline60.q_dbscan_clusters, lambda n: n == 29),
     ],
     ids=["bpe_merges", "bpe_encode_tokens", "dedup_clusters",
          "dbscan_clusters"],
@@ -71,6 +85,82 @@ def test_job_count_pinned(spark, sf_dir, jobs_of, query, pin):
     release_caches()
     assert rows
     assert pin(n), n
+
+
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.mark.parametrize(
+    "query",
+    [pipeline9.q_graph_pagerank, llm.q_dedup_clusters,
+     pipeline60.q_dbscan_clusters],
+    ids=["graph_pagerank", "dedup_clusters", "dbscan_clusters"],
+)
+def test_release_frees_every_pinned_rdd(spark, sf_dir, query):
+    """The caches and checkpoints a query's operators pin are all
+    registered for release: after each of two runs, release_caches()
+    leaves no persisted RDD that was not there before."""
+    release_caches()
+    baseline = _persisted_rdds(spark)
+    for _ in range(2):
+        assert query(spark, sf_dir).collect()
+        assert _persisted_rdds(spark) - baseline
+        release_caches()
+        assert _persisted_rdds(spark) <= baseline
+
+
+#: an empty frame of the projection ``cols`` in each shape that reaches
+#: the checkpoint differently: no partitions, a limit, a local relation
+#: and a filter Catalyst folds away
+_EMPTY_SHAPES = {
+    "range0": lambda spark, cols: spark.range(0).selectExpr(*cols),
+    "limit0": lambda spark, cols: spark.range(5).selectExpr(*cols).limit(0),
+    "local": lambda spark, cols: spark.createDataFrame(
+        [], spark.range(0).selectExpr(*cols).schema
+    ),
+    "filter_false": lambda spark, cols: (
+        spark.range(5).selectExpr(*cols).filter(F.lit(False))
+    ),
+}
+
+_EMPTY_OPERATORS = {
+    "pagerank": (graph.pagerank, ["id AS src", "id AS dst"]),
+    "connected_components": (
+        dedup.connected_components,
+        ["id AS id_a", "id AS id_b"],
+    ),
+    "dedup_clusters": (
+        dedup.dedup_clusters,
+        ["id AS doc_id", "CAST(id AS STRING) AS text"],
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", list(_EMPTY_SHAPES))
+@pytest.mark.parametrize("operator", list(_EMPTY_OPERATORS))
+def test_empty_input_gives_no_rows_in_bounded_time(spark, operator, shape):
+    """Each operator reads its path-picking row count off an
+    ``Observation`` on the materializing job; on every empty shape it
+    must fire (0 rows), not leave the build waiting for it."""
+    op, cols = _EMPTY_OPERATORS[operator]
+    df = _EMPTY_SHAPES[shape](spark, cols)
+    out = {}
+
+    def run():
+        try:
+            out["rows"] = op(df).collect()
+        except Exception as e:  # re-raised below, in the test's thread
+            out["error"] = e
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(120)
+    assert not worker.is_alive(), "no result within 120 s"
+    release_caches()
+    if "error" in out:
+        raise out["error"]
+    assert out["rows"] == []
 
 
 def _text(prefix, swaps=None):
