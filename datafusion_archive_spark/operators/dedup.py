@@ -19,6 +19,17 @@ Six strategies, all expressed as DataFrame compositions that scale to
   :mod:`datafusion_archive_spark.operators.similarity`
   (:func:`~datafusion_archive_spark.operators.similarity.cosine_pairs`).
 
+The MinHash and SimHash pair searches and :func:`dedup_clusters` build
+their signatures in Spark and checkpoint them
+(:func:`~datafusion_archive_spark.operators.util.materialized`); the
+row count observed on that job picks the path. At most
+``util.GRAPH_ROW_CAP`` documents, one Arrow task
+(:func:`~datafusion_archive_spark.operators.util.one_task`) bands the
+signatures, verifies the candidates and emits the rows with NumPy; the
+banding (:func:`_bucket_pairs`) is shared by all three kernels. Above
+the cap the banding and the candidate self-join run as Spark jobs.
+Both paths give the same rows.
+
 Every hash is md5-derived (:func:`~datafusion_archive_spark.functions.
 text.hash64`) so an external SQL oracle can reproduce results exactly.
 The reference engine has no dedup surface; this is north-star work
@@ -40,6 +51,7 @@ from datafusion_archive_spark.operators.util import (
     loop_session as _loop_session,
     materialized,
     one_task,
+    release_later,
     spread,
     unpersist_checkpoint,
 )
@@ -341,18 +353,49 @@ def minhash_lsh_pairs(
     Jaccard = fraction of agreeing minhashes, keeping pairs ≥ threshold.
 
     Returns ``(id_a < id_b, est_jaccard)``.
+
+    The signatures are checkpointed (id + num_hashes longs/doc ≈ 136 B
+    — ~140 GB even for 10^9 docs, spillable), and :func:`lsh_pairs`
+    picks the path from the row count observed on that job.
     """
     assert num_hashes % bands == 0
-    # Persist: the banding explode and the self-join below would
-    # otherwise recompute the signature aggregation once per plan
-    # branch. Signatures are tiny relative to the corpus (id +
-    # num_hashes longs/doc ≈ 136 B — ~140 GB even for 10^9 docs,
-    # spillable), so caching them is the intended scale design.
-    sig = cached(minhash_signatures(df, text_col, id_col, num_hashes, k))
-    return _lsh_pairs(sig, num_hashes, bands, threshold)
+    sig, n_docs = materialized(
+        minhash_signatures(df, text_col, id_col, num_hashes, k)
+    )
+    return lsh_pairs(sig, n_docs, num_hashes, bands, threshold)
 
 
-def _lsh_pairs(
+def lsh_pairs(
+    sig: DataFrame,
+    n_docs: int,
+    num_hashes: int = 16,
+    bands: int = 4,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """The pairs of :func:`minhash_lsh_pairs` over a materialized
+    signature table ``(id, mh_0, ...)`` of ``n_docs`` rows, so callers
+    that band one signature table several ways build it once.
+
+    At most util.GRAPH_ROW_CAP documents: a lazy util.one_task frame
+    bands, verifies and emits the pairs in one Python worker
+    (_lsh_pairs_kernel). Above it: the Spark banding, candidate
+    self-join and verify filter (_lsh_join). Both give the same rows."""
+    assert num_hashes % bands == 0
+    if n_docs > _util.GRAPH_ROW_CAP:
+        return _lsh_join(sig, num_hashes, bands, threshold)
+    typ = sig.schema["id"].dataType.simpleString()
+    kernel = functools.partial(
+        _lsh_pairs_kernel,
+        num_hashes=num_hashes,
+        bands=bands,
+        threshold=threshold,
+    )
+    return one_task(
+        sig, kernel, f"id_a {typ}, id_b {typ}, est_jaccard double"
+    )
+
+
+def _lsh_join(
     sig: DataFrame, num_hashes: int, bands: int, threshold: float
 ) -> DataFrame:
     """The LSH banding, candidate self-join and verify filter of
@@ -505,28 +548,23 @@ def simhash_near_pairs(
     right trade at 100 TB. Re-probed with (6,3): 733 → 2781 → 11763
     candidates at the same sizes — linear in docs, with the OUTPUT
     pair sets byte-identical to the simple scheme at every size.
+
+    The signatures are checkpointed, and the row count observed on that
+    job picks the path. At most util.GRAPH_ROW_CAP documents: a lazy
+    util.one_task frame builds the same keys, verifies the candidates
+    and emits the pairs in one Python worker (_simhash_pairs_kernel).
+    Above it: the key explode and the candidate self-join as Spark
+    jobs. Both give the same rows. A bad ``n_blocks`` raises
+    ``ValueError`` before any Spark job runs.
     """
     bits = min(bits, 60)
-    # persisted: the band explode + self-join would recompute the
-    # packed vote aggregation per plan branch otherwise
-    sig = cached(simhash64(df, text_col, id_col, bits))
-    # Band/combination keys are built as ONE F.expr SQL string, not
-    # chained Column ops: the (6,3) scheme's 20 structs × ~8 py4j
-    # round-trips each cost a measured 0.64 s of driver-side plan
-    # construction PER QUERY BUILD vs ~1 ms for the single expr()
-    # round-trip — same pattern (and same measurement protocol) as
-    # simhash64's packed votes and signature_col. The SQL is
-    # value-identical: shiftrightunsigned/&/shiftleft/| on the same
-    # long column, so plans differ only in how they were authored.
+    # each candidate key is a tuple of `width`-bit blocks of the
+    # signature: one block per band in the simple scheme, the kept
+    # combinations otherwise. Checked before the signature build, so
+    # a bad argument raises with no Spark job.
     if n_blocks is None:
-        band_width = bits // blocking_bands
-        band_mask = (1 << band_width) - 1
-        items = [
-            f"named_struct('band', {bidx}, 'band_val', "
-            f"(shiftrightunsigned(simhash, {bidx * band_width})"
-            f" & {band_mask}))"
-            for bidx in range(blocking_bands)
-        ]
+        width = bits // blocking_bands
+        keys = [(i,) for i in range(blocking_bands)]
     else:
         from itertools import combinations
 
@@ -542,26 +580,46 @@ def simhash_near_pairs(
                 f"(got {n_blocks} <= {max_hamming})"
             )
         width = bits // n_blocks
-        mask = (1 << width) - 1
-        block_sql = [
-            f"(shiftrightunsigned(simhash, {i * width}) & {mask})"
-            for i in range(n_blocks)
-        ]
-        items = []
-        for cidx, combo in enumerate(
-            combinations(range(n_blocks), combo_size)
-        ):
-            # pack the combo's blocks into one long (combo_size*width
-            # <= bits <= 60, always fits)
-            val = " | ".join(
+        keys = list(combinations(range(n_blocks), combo_size))
+    block = (1 << width) - 1
+    sig, n_docs = materialized(simhash64(df, text_col, id_col, bits))
+    if n_docs <= _util.GRAPH_ROW_CAP:
+        typ = sig.schema["id"].dataType.simpleString()
+        kernel = functools.partial(
+            _simhash_pairs_kernel,
+            # equal keys <=> equal signature bits under the key's mask
+            masks=[sum(block << (i * width) for i in key) for key in keys],
+            max_hamming=max_hamming,
+        )
+        return one_task(
+            sig, kernel, f"id_a {typ}, id_b {typ}, hamming int"
+        )
+    # Band/combination keys are built as ONE F.expr SQL string, not
+    # chained Column ops: the (6,3) scheme's 20 structs × ~8 py4j
+    # round-trips each cost a measured 0.64 s of driver-side plan
+    # construction PER QUERY BUILD vs ~1 ms for the single expr()
+    # round-trip — same pattern (and same measurement protocol) as
+    # simhash64's packed votes and signature_col. The SQL is
+    # value-identical: shiftrightunsigned/&/shiftleft/| on the same
+    # long column, so plans differ only in how they were authored.
+    # A key packs its blocks into one long (len(key) * width <= bits
+    # <= 60, always fits).
+    block_sql = [
+        f"(shiftrightunsigned(simhash, {i * width}) & {block})"
+        for i in range(bits // width)
+    ]
+    items = [
+        "named_struct('band', {}, 'band_val', {})".format(
+            kidx,
+            " | ".join(
                 f"shiftleft({block_sql[i]}, {pos * width})"
                 if pos
                 else block_sql[i]
-                for pos, i in enumerate(combo)
-            )
-            items.append(
-                f"named_struct('band', {cidx}, 'band_val', {val})"
-            )
+                for pos, i in enumerate(key)
+            ),
+        )
+        for kidx, key in enumerate(keys)
+    ]
     blocked = sig.select(
         "id",
         "simhash",
@@ -631,44 +689,50 @@ def _cc_kernel(t):
     )
 
 
-def _lsh_cluster_kernel(t, num_hashes, bands, threshold):
-    """util.one_task kernel of :func:`dedup_clusters`: the LSH pairs of
-    :func:`minhash_lsh_pairs`, their connected components and one
-    ``(keep_id, cluster_size)`` row per component, over the signature
-    table ``(id, mh_0, ...)``.
+def _est_jaccard(num_hashes):
+    """``round(agree / num_hashes, 4)`` for agree = 0..num_hashes as
+    Spark's ``F.round`` computes it: HALF_UP on the double's decimal
+    string (``BigDecimal.valueOf``), not on its binary value."""
+    from decimal import ROUND_HALF_UP, Decimal
 
-    Rows are densified in id order, so a smaller index is a smaller id.
-    Each band sorts the rows by its ``num_hashes/bands`` minhash values:
-    equal tuples are equal bucket strings, as the values are non-null
-    longs. The pairs of each run of same-size buckets are verified on
-    the full signature before the next run is made, at most n
-    candidates at a time (or one bucket's, if it alone has more), so
-    the worker holds verified edges, never the candidate cross product.
-    A pair that also shares an earlier band is dropped there, so each
-    edge is kept once. The verify filter is
-    minhash_lsh_pairs's ``round(agree/num_hashes, 4) >= threshold``:
-    HALF_UP rounding, exact for agree/16."""
     import numpy as np
-    import pyarrow as pa
+
+    return np.array([
+        float(
+            Decimal(repr(k / num_hashes)).quantize(
+                Decimal("0.0001"), ROUND_HALF_UP
+            )
+        )
+        for k in range(num_hashes + 1)
+    ])
+
+
+def _id_sorted(t, cols):
+    """The rows of the Arrow table ``t`` with a non-null ``id`` (a
+    null id pairs with nothing), in id order so a smaller row index is
+    a smaller id: the ids and each column of ``cols``, as NumPy."""
+    import numpy as np
     import pyarrow.compute as pc
 
-    typ = t.schema.field("id").type
-    t = t.filter(pc.is_valid(t["id"]))  # a null id pairs with nothing
+    if t["id"].null_count:  # filtering copies the table
+        t = t.filter(pc.is_valid(t["id"]))
     ids = t["id"].to_numpy()
     order = np.argsort(ids, kind="stable")
-    ids = ids[order]
-    mh = [t[f"mh_{i}"].to_numpy()[order] for i in range(num_hashes)]
-    del t, order
-    n = len(ids)
-    agree_ok = (
-        np.floor(np.arange(num_hashes + 1) / num_hashes * 10**4 + 0.5)
-        / 10**4
-        >= threshold
-    )
-    per_band = num_hashes // bands
-    ea, eb = [], []
-    for band in range(bands):
-        cols = mh[band * per_band : (band + 1) * per_band]
+    return ids[order], [t[c].to_numpy()[order] for c in cols]
+
+
+def _bucket_pairs(bands, n):
+    """Candidate pairs of the rows 0..n-1, band by band: ``bands``
+    yields each band's key columns, and rows with equal keys share a
+    bucket. Yields ``(band, a, b)`` index arrays with a < b (a stable
+    sort keeps row order within a bucket), for the pairs of each run
+    of same-size buckets at most n candidates at a time (or one
+    bucket's, if it alone has more), so the caller verifies them
+    before the next chunk is made and never holds the candidate cross
+    product. A pair that shares several bands comes once per band."""
+    import numpy as np
+
+    for band, cols in enumerate(bands):
         srt = np.lexsort(cols[::-1])
         new = np.zeros(n, bool)
         new[:1] = True
@@ -683,24 +747,127 @@ def _lsh_cluster_kernel(t, num_hashes, bands, threshold):
             step = max(1, n // len(iu))
             for k in range(0, len(first), step):
                 members = srt[first[k : k + step, None] + np.arange(size)]
-                a, b = members[:, iu].ravel(), members[:, ju].ravel()
-                eq = [c[a] == c[b] for c in mh]
-                ok = agree_ok[sum(eq)]
-                for j in range(0, band * per_band, per_band):
-                    ok &= ~np.logical_and.reduce(eq[j : j + per_band])
-                ea.append(a[ok])
-                eb.append(b[ok])
-    if not ea:
+                yield band, members[:, iu].ravel(), members[:, ju].ravel()
+
+
+def _lsh_band_pairs(mh, bands, keep):
+    """The verified LSH pairs of the minhash columns ``mh``, as
+    ``(a, b, agree)`` chunks of row indices (a < b) and agreeing
+    minhash counts: each band of ``len(mh) / bands`` columns is a
+    bucket key (equal tuples are equal bucket strings, as the values
+    are non-null longs), a candidate is kept where ``keep[agree]``,
+    and a pair that also shares an earlier band is dropped there, so
+    each pair comes once."""
+    import numpy as np
+
+    per_band = len(mh) // bands
+    keys = [mh[j : j + per_band] for j in range(0, len(mh), per_band)]
+    for band, a, b in _bucket_pairs(keys, len(mh[0])):
+        eq = [c[a] == c[b] for c in mh]
+        agree = sum(eq)
+        ok = keep[agree]
+        for j in range(0, band * per_band, per_band):
+            ok &= ~np.logical_and.reduce(eq[j : j + per_band])
+        yield a[ok], b[ok], agree[ok]
+
+
+def _lsh_pairs_kernel(t, num_hashes, bands, threshold):
+    """util.one_task kernel of :func:`lsh_pairs`: the
+    ``(id_a, id_b, est_jaccard)`` rows of :func:`_lsh_join` over the
+    signature table ``(id, mh_0, ...)``, verified with the same
+    ``round(agree/num_hashes, 4) >= threshold``."""
+    import pyarrow as pa
+
+    typ = t.schema.field("id").type
+    ids, mh = _id_sorted(t, [f"mh_{i}" for i in range(num_hashes)])
+    del t
+    est = _est_jaccard(num_hashes)
+    for a, b, agree in _lsh_band_pairs(mh, bands, est >= threshold):
+        if len(a):
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids[a], type=typ),
+                    pa.array(ids[b], type=typ),
+                    pa.array(est[agree]),
+                ],
+                names=["id_a", "id_b", "est_jaccard"],
+            )
+
+
+def _lsh_cluster_kernel(t, num_hashes, bands, threshold):
+    """util.one_task kernel of :func:`dedup_clusters`: the pairs of
+    :func:`_lsh_pairs_kernel`, their connected components and one
+    ``(keep_id, cluster_size)`` row per component, over the signature
+    table ``(id, mh_0, ...)``. The worker holds verified edges, never
+    the candidate cross product."""
+    import numpy as np
+    import pyarrow as pa
+
+    typ = t.schema.field("id").type
+    ids, mh = _id_sorted(t, [f"mh_{i}" for i in range(num_hashes)])
+    del t
+    keep = _est_jaccard(num_hashes) >= threshold
+    edges = [(a, b) for a, b, _ in _lsh_band_pairs(mh, bands, keep)]
+    if not edges:
         return
-    a, b = np.concatenate(ea), np.concatenate(eb)
-    del ea, eb
-    lab = _min_labels(np.concatenate([a, b]), np.concatenate([b, a]), n)
+    a, b = (np.concatenate(e) for e in zip(*edges))
+    del edges
+    u, v = np.concatenate([a, b]), np.concatenate([b, a])
+    del a, b
+    lab = _min_labels(u, v, len(ids))
     roots, sizes = np.unique(lab, return_counts=True)
     big = sizes > 1
     yield pa.RecordBatch.from_arrays(
         [pa.array(ids[roots[big]], type=typ), pa.array(sizes[big])],
         names=["keep_id", "cluster_size"],
     )
+
+
+def _popcount(x):
+    """Set bits of each element of the int64 array ``x`` (SWAR: numpy
+    1.26 has no ``bitwise_count``)."""
+    import numpy as np
+
+    u = np.uint64
+    x = x.view(u)
+    x = x - ((x >> u(1)) & u(0x5555555555555555))
+    x = (x & u(0x3333333333333333)) + ((x >> u(2)) & u(0x3333333333333333))
+    x = (x + (x >> u(4))) & u(0x0F0F0F0F0F0F0F0F)
+    return ((x * u(0x0101010101010101)) >> u(56)).astype(np.int32)
+
+
+def _simhash_pairs_kernel(t, masks, max_hamming):
+    """util.one_task kernel of :func:`simhash_near_pairs`: the
+    ``(id_a, id_b, hamming)`` rows of its Spark join over the signature
+    table ``(id, simhash)``. Each key's rows are bucketed by
+    ``simhash & mask`` (equal masked bits are equal packed keys),
+    sorted with the id as the tiebreak, so a pair comes as
+    ``id_a < id_b``. A candidate is verified by the exact popcount of
+    the XOR, and a pair that an earlier key already matched (no XOR
+    bit under its mask) is dropped there, so each pair comes once."""
+    import numpy as np
+    import pyarrow as pa
+
+    typ = t.schema.field("id").type
+    ids, (s,) = _id_sorted(t, ["simhash"])
+    del t
+    for key, a, b in _bucket_pairs(([s & m] for m in masks), len(ids)):
+        x = s[a] ^ s[b]
+        ok = _popcount(x) <= max_hamming
+        a, b, x = a[ok], b[ok], x[ok]
+        ok = np.ones(len(x), bool)
+        for m in masks[:key]:
+            ok &= (x & m) != 0
+        a, b, d = a[ok], b[ok], _popcount(x[ok])
+        if len(a):
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids[a], type=typ),
+                    pa.array(ids[b], type=typ),
+                    pa.array(d),
+                ],
+                names=["id_a", "id_b", "hamming"],
+            )
 
 
 def _rewrap_checkpoint(ck: DataFrame) -> DataFrame:
@@ -811,6 +978,10 @@ def connected_components(
     with _loop_session(pairs.sparkSession, 2 * n_nodes + n_edges) as ls:
         edges_l = ls.handoff(edges)
         labels_l = ls.handoff(labels)
+        # frees what the current round reads once the next round is
+        # materialized: the persisted labels, then each round's
+        # checkpoint (the rewrapped frame holds no blocks of its own)
+        release = labels.unpersist
         for _ in range(max_iterations):
             # min over the ORIGINAL edges plus the LABEL-POINTER edges in
             # both directions. Plain propagation moves the min value one
@@ -901,7 +1072,8 @@ def connected_components(
             # convergence straight off the checkpoint job's metrics
             # (the _old column carried through the round)
             changed = obs.get["n_changed"]
-            labels_l.unpersist()
+            release()
+            release = functools.partial(unpersist_checkpoint, ck)
             labels_l = rewrapped.select("node", "component")
             if changed == 0:
                 break
@@ -910,7 +1082,8 @@ def connected_components(
         # under the caller's conf
         result = ls.handback(labels_l)
     unpersist_checkpoint(edges)
-    labels.unpersist()
+    # the result reads the last round
+    release_later(release)
     if changed != 0:
         raise RuntimeError(
             f"connected_components did not converge within "
@@ -955,7 +1128,7 @@ def dedup_clusters(
             threshold=threshold,
         )
         return one_task(sig, kernel, f"keep_id {typ}, cluster_size bigint")
-    pairs = _lsh_pairs(sig, num_hashes, bands, threshold)
+    pairs = _lsh_join(sig, num_hashes, bands, threshold)
     comp = connected_components(pairs)
     return (
         comp.groupBy("component")

@@ -23,6 +23,8 @@ cap it is the distributed join + aggregate loop.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -33,6 +35,8 @@ from datafusion_archive_spark.operators.util import (
     loop_session,
     materialized,
     one_task,
+    release_later,
+    unpersist_checkpoint,
 )
 
 
@@ -383,6 +387,7 @@ def pagerank(
     with loop_session(edges.sparkSession, n_directed + n) as ls:
         out_l = ls.handoff(out)
         ranks_l = ls.handoff(ranks)
+        ck = ranks
         for _ in range(iterations):
             contrib = (
                 out_l.join(
@@ -399,10 +404,14 @@ def pagerank(
                     ).alias("r"),
                 ).localCheckpoint
             )
-            ranks_l = new_ranks
+            # nothing reads the superseded round's checkpoint now
+            unpersist_checkpoint(ck)
+            ck = ranks_l = new_ranks
         # the per-iteration checkpoints are materialized, so the
         # handed-back frame's scan runs under the caller's conf
         ranks = ls.handback(ranks_l)
+    # the returned frame reads the last round's checkpoint
+    release_later(functools.partial(unpersist_checkpoint, ck))
     return ranks.select(
         "node", (F.col("r") * F.lit(float(n))).alias("rank")
     )

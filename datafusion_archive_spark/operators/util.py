@@ -15,8 +15,9 @@ from pyspark.sql import functions as F
 #: or checkpointed. The operators in this package pin small
 #: intermediates (signatures, normalized vectors, edge lists) that
 #: outlive the returned lazy DataFrame, so they cannot free them
-#: themselves. ``cached()`` registers each persisted frame's unpersist
-#: and ``materialized()`` each checkpoint's; harnesses (bench.py,
+#: themselves. ``cached()`` registers each persisted frame's unpersist,
+#: ``materialized()`` each checkpoint's and the above-cap loops their
+#: last round's (:func:`release_later`); harnesses (bench.py,
 #: tools/check_oracle.py) and each new query invocation call
 #: :func:`release_caches` once the previous result has been consumed,
 #: keeping a long session's footprint bounded to one query's working
@@ -33,8 +34,13 @@ def cached(df: DataFrame) -> DataFrame:
     """
     if not df.is_cached:
         df = df.persist()
-    _ACTIVE_CACHES.append(df.unpersist)
+    release_later(df.unpersist)
     return df
+
+
+def release_later(release: Callable[[], object]) -> None:
+    """Run ``release`` (an unpersist) at the next :func:`release_caches`."""
+    _ACTIVE_CACHES.append(release)
 
 
 def materialized(df: DataFrame) -> tuple[DataFrame, int]:
@@ -57,7 +63,7 @@ def materialized(df: DataFrame) -> tuple[DataFrame, int]:
     ck = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
         eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK_DESER
     )
-    _ACTIVE_CACHES.append(lambda: unpersist_checkpoint(ck))
+    release_later(lambda: unpersist_checkpoint(ck))
     return ck, obs.get["n"]
 
 
@@ -215,8 +221,10 @@ def loop_parts(spark, n_rows: int) -> int:
     return min(max(dp, lo), hi)
 
 
-#: the one size bound of the graph operators (dedup.connected_components,
-#: dedup.dedup_clusters and graph.pagerank / triangle_stats), checked
+#: the one size bound of the graph and near-dup operators
+#: (dedup.connected_components, dedup.dedup_clusters,
+#: dedup.minhash_lsh_pairs, dedup.simhash_near_pairs and graph.pagerank /
+#: triangle_stats), checked
 #: against real row counts (the row count observed on the materializing
 #: job where it picks a path), never Catalyst's carried checkpoint
 #: estimates:
@@ -237,7 +245,18 @@ def loop_parts(spark, n_rows: int) -> int:
 #:   are Spark jobs. At the cap (4 cores, every document in a
 #:   3-document cluster, tools/dedup_one_task_ab.log) the task took
 #:   13-18 s with a ~710 MB worker peak RSS (the kernel frees its
-#:   350 MB Arrow input once converted).
+#:   350 MB Arrow input once converted);
+#: - a corpus of at most this many documents has its MinHash or SimHash
+#:   pairs found in one Python worker (minhash_lsh_pairs,
+#:   simhash_near_pairs); past it the banding and the candidate
+#:   self-join are Spark jobs. At the cap (4 cores, every document in a
+#:   3-document cluster, tools/near_pairs_one_task.log; that probe reads
+#:   dedup_clusters at ~880 MB): MinHash pairs took 10-14 s with a
+#:   ~910 MB worker peak RSS; SimHash pairs of random 60-bit signatures
+#:   at max_hamming 3 took 11-17 s and ~350 MB with four 15-bit bands
+#:   (random band collisions make 2.5e8 candidates to verify) and
+#:   8-11 s and ~330 MB with six 10-bit blocks taken three at a time
+#:   (1.0e7 candidates).
 GRAPH_ROW_CAP = 2_000_000
 
 

@@ -25,7 +25,7 @@ from datafusion_archive_spark.queries.llm import (
     _MINHASH_SIG_CTE,
     _N_MINHASH,
 )
-from datafusion_archive_spark.operators.util import load_table
+from datafusion_archive_spark.operators.util import load_table, materialized
 
 _CONFIGS = [2, 4, 8]  # bands; rows_per_band = 16 / bands
 _VERIFY_T = 0.25
@@ -42,17 +42,22 @@ def q_lsh_tuning_curve(spark, sf):
     (est ≥ 0.25), and the theoretical capture probability at Jaccard
     0.5. The dial between recall and candidate-join volume.
 
-    Scale: each config is one banded self-join over the SHARED cached
-    signature table (num_hashes longs per doc) — the corpus is
-    scanned once; the three configs reuse the signatures."""
-    docs = _t(spark, sf, "documents")
+    Scale: the signature table (num_hashes longs per doc) is
+    checkpointed once, with its row count observed on that job, and
+    each config bands it (dedup.lsh_pairs) — the corpus is scanned
+    once; the three configs reuse the signatures."""
+    sig, n_docs = materialized(
+        dedup.minhash_signatures(
+            _t(spark, sf, "documents"), num_hashes=_N_MINHASH, k=3
+        )
+    )
     rows = []
     for bands in _CONFIGS:
-        pairs = dedup.minhash_lsh_pairs(
-            docs,
+        pairs = dedup.lsh_pairs(
+            sig,
+            n_docs,
             num_hashes=_N_MINHASH,
             bands=bands,
-            k=3,
             threshold=0.0,  # keep ALL candidates; verify in the agg
         )
         rows.append(

@@ -420,16 +420,23 @@ def test_ivf_auto_stride_sizes_and_recalls(spark):
     assert hits / brute.count() >= 0.6  # clustered data: probes land
 
 
-def test_simhash_combination_blocking_validates_params(spark):
+def test_simhash_combination_blocking_validates_params(spark, jobs_of):
+    """A bad ``n_blocks`` raises at build time, before the signature
+    checkpoint runs any Spark job."""
     from datafusion_archive_spark.operators import dedup
 
     df = spark.createDataFrame([{"doc_id": 0, "text": "a b c"}])
-    with pytest.raises(ValueError, match="must divide"):
-        dedup.simhash_near_pairs(df, bits=64, n_blocks=7).collect()
-    with pytest.raises(ValueError, match="n_blocks > max_hamming"):
-        dedup.simhash_near_pairs(
-            df, bits=64, max_hamming=6, n_blocks=6
-        ).collect()
+
+    def raises(match, **kw):
+        with pytest.raises(ValueError, match=match):
+            dedup.simhash_near_pairs(df, bits=64, **kw).collect()
+
+    _, n = jobs_of(lambda: raises("must divide", n_blocks=7))
+    assert n == 0
+    _, n = jobs_of(
+        lambda: raises("n_blocks > max_hamming", max_hamming=6, n_blocks=6)
+    )
+    assert n == 0
 
 
 # ---------------------------------------------------------------------------
